@@ -191,7 +191,8 @@ def lang_id(text: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Dense-regime token-set masks (optimization round 12).
+# Token-set pair primitive: dense-mask vs inverted-index (optimization
+# rounds 12-13).
 # ---------------------------------------------------------------------------
 
 # A token-set similarity join has two regimes. SPARSE (real corpora:
@@ -207,15 +208,16 @@ def lang_id(text: Column) -> Column:
 # document's token set folds into one BIGINT and |A∩B| is a single
 # AND+POPCOUNT — the same n²/2 pairs evaluate as a broadcast pair scan
 # of narrow mask rows with no explode, no duplication and no pair-count
-# shuffle. The probe that picks the regime is one bounded job
-# (limit cap+1 over distinct tokens).
+# shuffle. The regime is picked ONCE, in token_set_pairs, by two
+# probes: an HLL sketch of the vocabulary size, then (only when the
+# sketch is near the cap) a capped distinct (limit cap+1).
 DENSE_VOCAB_CAP = 64
 
 
 def dense_token_masks(df, id_col: str, text_col: str = "text"):
     """(id, __mask, __n) per document when the global distinct-token
     vocabulary of ``df[text_col]`` fits ``DENSE_VOCAB_CAP`` bits, else
-    ``None`` (caller keeps its sparse inverted-index plan).
+    ``None`` (token_set_pairs then takes the inverted-index plan).
 
     ``__mask`` ORs ``1 << pos(token)`` over the document's tokens
     (duplicate tokens vanish in the OR — no pre-distinct pass);
@@ -232,9 +234,10 @@ def dense_token_masks(df, id_col: str, text_col: str = "text"):
     "sparse" without ever paying a distinct shuffle (Spark cannot
     early-terminate a distinct aggregate, VERDICT r12 §What's-wrong
     #2). The regime choice is performance-only — both branches compute
-    identical results (branch-equivalence test, r12) — so the sketch's
-    ±3·rsd error needs only a safety factor, not exactness: estimates
-    above 4× the cap are sparse outright; the exact bit-position vocab
+    identical results (regime equivalence test per caller,
+    tests/test_round12_opt.py) — so the sketch's ±3·rsd error needs
+    only a safety factor, not exactness: estimates above 4× the cap
+    are sparse outright; the exact bit-position vocab
     (which needs the true sorted token set) is probed only below that,
     where the distinct's exchange is provably tiny. The mask frame is
     then ckpt-materialized ONCE: mask_pair_scan aliases it twice (scan
@@ -273,7 +276,7 @@ def mask_pair_scan(masks, id_col: str, spark):
     parallelism so the n²/2 popcount evaluations spread across cores
     instead of landing on the one AQE-coalesced post-aggregate
     partition. Returns the joined frame with both sides aliased a/b;
-    callers add their own measure + threshold.
+    token_set_pairs projects it to the pair contract.
 
     Scale: right while DISTINCT DOCUMENTS fit a broadcast (~10⁷ rows of
     16 B); past that, block the pair grid (QB×IB on id hash —
@@ -284,3 +287,56 @@ def mask_pair_scan(masks, id_col: str, spark):
     a = masks.repartition(spark.sparkContext.defaultParallelism).alias("a")
     b = masks.alias("b")
     return a.join(F.broadcast(b), F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+
+
+def token_set_pairs(df, id_col: str, text_col: str, spark):
+    """Every unordered document pair sharing at least one distinct
+    token: ``(id_a, id_b, na, nb, common)`` with ``id_a < id_b``,
+    ``na``/``nb`` the two distinct-token counts and ``common`` the
+    size of the intersection (all INT). Documents with no tokens (empty
+    or NULL text) pair with nothing. Callers add only their measure and
+    threshold.
+
+    The regime is decided here, once per call (see DENSE_VOCAB_CAP):
+
+    DENSE (vocabulary ≤ 64): the ckpt'd mask frame of
+    dense_token_masks through mask_pair_scan's broadcast pair scan,
+    ``common = bit_count(a & b)``; ``common > 0`` drops the disjoint
+    pairs the scan also visits, so both regimes return the same set.
+
+    SPARSE: the inverted-index join — explode distinct tokens,
+    equi-join on token with ``a.id < b.id``, count common per pair.
+    Never the O(n²) cross product; its cost is Σ df(token)², so hot
+    tokens are what bound it (df-capped / MinHash variants in
+    operators/llm.py are the declared paths for zipfian heads).
+    """
+    masks = dense_token_masks(df, id_col, text_col)
+    if masks is not None:
+        return (
+            mask_pair_scan(masks, id_col, spark)
+            .select(
+                F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"),
+                F.col("a.__n").alias("na"),
+                F.col("b.__n").alias("nb"),
+                F.bit_count(F.col("a.__mask").bitwiseAND(F.col("b.__mask"))).alias("common"),
+            )
+            .filter(F.col("common") > 0)
+        )
+    toks = distinct_tokens(F.col(text_col))
+    rows = df.select(
+        F.col(id_col).alias("__id"),
+        F.size(toks).alias("__n"),
+        F.explode(toks).alias("__tok"),
+    )
+    a, b = rows.alias("a"), rows.alias("b")
+    return (
+        a.join(b, (F.col("a.__tok") == F.col("b.__tok")) & (F.col("a.__id") < F.col("b.__id")))
+        .groupBy(
+            F.col("a.__id").alias("id_a"),
+            F.col("b.__id").alias("id_b"),
+            F.col("a.__n").alias("na"),
+            F.col("b.__n").alias("nb"),
+        )
+        .agg(F.count("*").cast("int").alias("common"))
+    )

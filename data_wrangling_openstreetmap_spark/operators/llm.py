@@ -121,9 +121,9 @@ WHERE jaccard >= 0.9
 
 @register("l2_jaccard_pairs", oracle=_L2_JACCARD_ORACLE, tags=("L2", "J8"))
 def l2_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate pairs by distinct-token Jaccard ≥ 0.9. Two exact
-    regimes, picked by a bounded vocabulary probe
-    (T.dense_token_masks):
+    """Near-duplicate pairs by distinct-token Jaccard ≥ 0.9 over the
+    token-set pair primitive (T.token_set_pairs), which picks one of
+    two exact regimes from a vocabulary probe:
 
     DENSE (global vocab ≤ 64 — this fixture's 31-word synthetic corpus
     at every SF): each doc's token set folds into one BIGINT mask,
@@ -141,52 +141,14 @@ def l2_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dups) or route to the registered MinHash-LSH variant.
     Jaccard is exact integer-ratio math in both regimes, so both
     engines produce bit-identical doubles — no rounding needed
-    (branch equivalence test: tests/test_round12_opt.py).
+    (regime equivalence test: tests/test_round12_opt.py).
     """
     docs = load_table(spark, sf_dir, "documents")
-    masks = T.dense_token_masks(docs, "doc_id")
-    if masks is None:
-        return _l2_jaccard_pairs_sparse(docs)
-    common = F.bit_count(F.col("a.__mask").bitwiseAND(F.col("b.__mask")))
-    jac = common.cast("double") / (F.col("a.__n") + F.col("b.__n") - common)
-    return (
-        T.mask_pair_scan(masks, "doc_id", spark)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.9)
-    )
-
-
-def _l2_jaccard_pairs_sparse(docs: DataFrame) -> DataFrame:
-    """Inverted-index regime of l2_jaccard_pairs (see its docstring)."""
-    toks = docs.select(
-        F.col("doc_id"),
-        F.size(T.distinct_tokens(F.col("text"))).alias("n_toks"),
-        F.explode(T.distinct_tokens(F.col("text"))).alias("tok"),
-    )
-    a = toks.alias("a")
-    b = toks.alias("b")
-    common = (
-        a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_toks").alias("na"),
-            F.col("b.n_toks").alias("nb"),
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    jac = F.col("common").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("common")
-    )
-    return (
-        common.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.9)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    pairs = T.token_set_pairs(docs, "doc_id", "text", spark)
+    jac = F.col("common").cast("double") / (F.col("na") + F.col("nb") - F.col("common"))
+    return pairs.select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), jac.alias("jaccard")
+    ).filter(F.col("jaccard") >= 0.9)
 
 
 # ---------------------------------------------------------------------------
@@ -5230,71 +5192,30 @@ def l2_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed (contained → container); integer-ratio math needs no
     rounding.
 
-    Regime split (optimization r12, same probe as l2_jaccard_pairs —
-    the r1–r11 inverted-index form measured 133 s at sf0.1 on the
-    dense 31-word fixture vocabulary): when the global vocab fits 64
-    bits the containment evaluates as a broadcast mask pair scan
-    (common = bit_count(a & b), na = bit_count(a)), identical result,
-    no token explode and no pair-count shuffle.
+    Built on the token-set pair primitive (T.token_set_pairs — the
+    dense mask scan on this fixture's 31-word vocabulary; the r1–r11
+    inverted-index form measured 133 s at sf0.1 there). The primitive
+    visits each unordered pair once; the DIRECTION comes from the
+    strict size asymmetry (the smaller set is the contained side — both
+    directions can never hold, and equal sizes never qualify), so a
+    conditional swap recovers the oracle's (a.id <> b.id, |a| < |b|)
+    enumeration exactly.
 
-    Scale (sparse regime): the same inverted-index shape as
-    l2_jaccard_pairs (explode distinct tokens → equi-join on token →
-    count common per pair) — never the O(n²) cross product. The
+    Scale (sparse regime): the inverted-index shape shared with
+    l2_jaccard_pairs — never the O(n²) cross product. The
     size-asymmetry predicate (|A| < |B|) is also the classic
     prefix-filter accelerant: at 100 TB, candidates additionally prune
     on the smallest (1−t)·|A|+1 tokens of each doc, and hot tokens
     df-cap exactly as the Jaccard twin documents.
     """
     docs = load_table(spark, sf_dir, "documents")
-    masks = T.dense_token_masks(docs, "doc_id")
-    if masks is not None:
-        # The id-ordered pair scan visits each unordered pair once; the
-        # DIRECTION comes from the strict size asymmetry (the smaller
-        # set is the contained side — both directions can never hold),
-        # so a conditional swap recovers the oracle's (a.id <> b.id,
-        # |a| < |b|) enumeration exactly.
-        a_small = F.col("a.__n") < F.col("b.__n")
-        common = F.bit_count(F.col("a.__mask").bitwiseAND(F.col("b.__mask")))
-        cont = common.cast("double") / F.least(F.col("a.__n"), F.col("b.__n"))
-        return (
-            T.mask_pair_scan(masks, "doc_id", spark)
-            .filter((F.col("a.__n") != F.col("b.__n")) & (cont >= _CONTAIN_T))
-            .select(
-                F.when(a_small, F.col("a.doc_id"))
-                .otherwise(F.col("b.doc_id"))
-                .alias("contained_doc"),
-                F.when(a_small, F.col("b.doc_id"))
-                .otherwise(F.col("a.doc_id"))
-                .alias("container_doc"),
-                cont.alias("containment"),
-            )
-        )
-    toks = docs.select(
-        F.col("doc_id"),
-        F.size(T.distinct_tokens(F.col("text"))).alias("n_toks"),
-        F.explode(T.distinct_tokens(F.col("text"))).alias("tok"),
-    )
-    a = toks.alias("a")
-    b = toks.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.doc_id") != F.col("b.doc_id"))
-            & (F.col("a.n_toks") < F.col("b.n_toks")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("contained_doc"),
-            F.col("b.doc_id").alias("container_doc"),
-            F.col("a.n_toks").alias("na"),
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    cont = F.col("common").cast("double") / F.col("na")
-    return (
-        common.withColumn("containment", cont)
-        .filter(F.col("containment") >= _CONTAIN_T)
-        .select("contained_doc", "container_doc", "containment")
+    pairs = T.token_set_pairs(docs, "doc_id", "text", spark)
+    a_small = F.col("na") < F.col("nb")
+    cont = F.col("common").cast("double") / F.least(F.col("na"), F.col("nb"))
+    return pairs.filter((F.col("na") != F.col("nb")) & (cont >= _CONTAIN_T)).select(
+        F.when(a_small, F.col("id_a")).otherwise(F.col("id_b")).alias("contained_doc"),
+        F.when(a_small, F.col("id_b")).otherwise(F.col("id_a")).alias("container_doc"),
+        cont.alias("containment"),
     )
 
 

@@ -109,8 +109,9 @@ def x1b_asof_left_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # X2 — SIMILARITY JOIN keyword: the user writes the pairwise predicate,
-# the plan that runs is the inverted-index join. Oracle is the exact
-# pairwise form (integer-ratio Jaccard — bit-identical doubles).
+# the plan that runs is the token-set pair primitive's (inverted-index
+# join, or the mask pair scan on a ≤ 64-token vocabulary). Oracle is the
+# exact pairwise form (integer-ratio Jaccard — bit-identical doubles).
 # ---------------------------------------------------------------------------
 
 _X2_ORACLE = r"""
@@ -132,9 +133,12 @@ WHERE similarity >= 0.9
 @register("x2_similarity_sql", oracle=_X2_ORACLE, tags=("L2", "J8"))
 def x2_similarity_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``SIMILARITY JOIN`` keyword end-to-end: the O(n²) predicate the
-    SQL expresses is lowered to the token-blocked inverted-index join
-    (plans/sql_ext.py) — the §4.2 "similarity-join rewrite" delivered
-    at the SQL surface. Jaccard is exact integer-ratio math; no
+    SQL expresses is lowered to the token-set pair primitive
+    (plans/sql_ext.py → functions/text.py::token_set_pairs) — the §4.2
+    "similarity-join rewrite" delivered at the SQL surface. On this
+    fixture's 31-word vocabulary the primitive runs the broadcast mask
+    pair scan; an open vocabulary gets the token-blocked inverted-index
+    join. Jaccard is exact integer-ratio math; no
     rounding needed for cross-engine hashing.
 
     Scale: shuffle by token; df-capped / MinHash-LSH variants

@@ -7,9 +7,9 @@ compiled Scala/JVM class on the driver classpath, which this
 Python-only repo cannot ship — so the same surface is provided one
 layer up: :func:`sql` accepts a documented superset of Spark SQL,
 lowers the extended constructs to the engine's scale-safe DataFrame
-plans (the union-timeline as-of join, the inverted-index similarity
-join), and hands everything else to ``spark.sql`` verbatim. The user
-experience is identical — write SQL with the extra keyword, get back a
+plans (the union-timeline as-of join, the token-set pair primitive for
+the similarity join), and hands everything else to ``spark.sql``
+verbatim. The user experience is identical — write SQL with the extra keyword, get back a
 DataFrame whose physical plan is the one a planner rule would have
 produced.
 
@@ -52,11 +52,14 @@ Grammar (case-insensitive; one extended join per statement):
 
   Exact distinct-token Jaccard (whitespace tokens — the engine's
   ``functions.text.tokens`` definition) over a self-join, lowered to the
-  inverted-index form (explode tokens, equi-join on token, count common
-  per pair) — the planner-level rewrite §4.2 describes: the user writes
-  the O(n²) pairwise predicate, the plan that runs is the token-blocked
-  join that survives 100 TB. Result columns: ``<a>.<id>``, ``<b>.<id>``
-  and ``similarity``.
+  token-set pair primitive ``functions.text.token_set_pairs`` — the
+  planner-level rewrite §4.2 describes: the user writes the O(n²)
+  pairwise predicate, and a vocabulary probe picks the plan that runs.
+  An open vocabulary gets the inverted-index join (explode tokens,
+  equi-join on token, count common per pair) that survives 100 TB; a
+  vocabulary of ≤ 64 tokens gets the broadcast pair scan over 64-bit
+  token masks. ``<threshold>`` must be > 0. Result columns:
+  ``<a>.<id>``, ``<b>.<id>`` and ``similarity``.
 
 ``QUALIFY``::
 
@@ -381,54 +384,19 @@ def _lower_similarity(spark: SparkSession, query: str, m: re.Match) -> DataFrame
     # normalize so the FIRST alias is the lesser id.
     lo, hi = (la, ra) if m.group("i1a").lower() == la.lower() else (ra, la)
     thr = float(m.group("thr"))
+    if thr <= 0:
+        # Jaccard >= 0 holds for EVERY pair, token-less docs included:
+        # the cross product, which neither regime of the pair primitive
+        # plans (both emit only pairs sharing a token).
+        raise SqlExtError(f"SIMILARITY JOIN threshold must be > 0 (got {m.group('thr')})")
 
-    src = spark.table(m.group("lt"))
-    masks = _text.dense_token_masks(src, id_col, text_col)
-    if masks is not None:
-        # Dense regime (optimization r12): global vocab ≤ 64 bits, so
-        # the lowering emits the broadcast mask pair scan instead of
-        # the inverted-index join — same exact semantics (bit_count
-        # intersection / integer-ratio Jaccard), no token explode, no
-        # pair-count shuffle. See functions/text.py::dense_token_masks
-        # for the regime argument; sparse vocabularies keep the
-        # inverted-index lowering below.
-        common = F.bit_count(F.col("a.__mask").bitwiseAND(F.col("b.__mask")))
-        sim = common.cast("double") / (F.col("a.__n") + F.col("b.__n") - common)
-        lowered = (
-            _text.mask_pair_scan(masks, id_col, spark)
-            .select(
-                F.col(f"a.{id_col}").alias(f"{lo}_{id_col}"),
-                F.col(f"b.{id_col}").alias(f"{hi}_{id_col}"),
-                sim.alias("similarity"),
-            )
-            .filter(F.col("similarity") >= thr)
-        )
-    else:
-        toks_arr = _text.distinct_tokens(F.col(text_col))
-        toks = src.select(
-            F.col(id_col).alias("__id"),
-            F.size(toks_arr).alias("__n"),
-            F.explode(toks_arr).alias("__tok"),
-        )
-        a, b = toks.alias("a"), toks.alias("b")
-        common = (
-            a.join(b, (F.col("a.__tok") == F.col("b.__tok")) & (F.col("a.__id") < F.col("b.__id")))
-            .groupBy(
-                F.col("a.__id").alias(f"{lo}_{id_col}"),
-                F.col("b.__id").alias(f"{hi}_{id_col}"),
-                F.col("a.__n").alias("__na"),
-                F.col("b.__n").alias("__nb"),
-            )
-            .agg(F.count("*").alias("__common"))
-        )
-        sim = F.col("__common").cast("double") / (
-            F.col("__na") + F.col("__nb") - F.col("__common")
-        )
-        lowered = (
-            common.withColumn("similarity", sim)
-            .filter(F.col("similarity") >= thr)
-            .select(f"{lo}_{id_col}", f"{hi}_{id_col}", "similarity")
-        )
+    cand = _text.token_set_pairs(spark.table(m.group("lt")), id_col, text_col, spark)
+    sim = F.col("common").cast("double") / (F.col("na") + F.col("nb") - F.col("common"))
+    lowered = cand.select(
+        F.col("id_a").alias(f"{lo}_{id_col}"),
+        F.col("id_b").alias(f"{hi}_{id_col}"),
+        sim.alias("similarity"),
+    ).filter(F.col("similarity") >= thr)
     view = f"__sim_{la}_{ra}_{next(_VIEW_SEQ)}"
     lowered.createOrReplaceTempView(view)
     rewritten = _qualify(query[: m.start()] + f"FROM {view}" + query[m.end() :], amap)

@@ -4,10 +4,10 @@ Each optimization was proven output-identical against the DuckDB
 oracles and the pre-change golden snapshots; these tests additionally
 pin the NEW internals' edge behavior that the fixture cannot exercise:
 
-- the dense/sparse regime split of the token-set similarity family
+- the dense/sparse regime split of the token-set pair primitive
   (the fixture's 31-word vocabulary always takes the dense branch, so
-  the branch EQUIVALENCE and the >64-vocab refusal need synthetic
-  corpora);
+  each caller's regime EQUIVALENCE and the >64-vocab refusal need
+  synthetic corpora);
 - the vectorized top-k kernel's boundary semantics (blocks with fewer
   than k non-self candidates — the case where the -inf self-masking
   could diverge from the old remove-then-slice loop).
@@ -18,13 +18,11 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from pyspark.sql import functions as F
-
 from data_wrangling_openstreetmap_spark.functions import text as T
-from data_wrangling_openstreetmap_spark.operators.llm import (
-    _l2_jaccard_pairs_sparse,
-    _vectorized_topk,
-)
+from data_wrangling_openstreetmap_spark.io import load_table
+from data_wrangling_openstreetmap_spark.operators import llm
+from data_wrangling_openstreetmap_spark.operators.llm import _vectorized_topk
+from data_wrangling_openstreetmap_spark.plans import sql_ext
 
 
 def _docs(spark, texts):
@@ -48,36 +46,69 @@ def test_dense_token_masks_counts_match_distinct_tokens(spark):
     assert got == {1: 3, 2: 1, 3: 1}
 
 
-def test_dense_branch_equals_sparse_branch_jaccard(spark):
-    # small closed vocabulary, duplicate tokens, exact/near/disjoint
-    # pairs — run BOTH regimes on the same frame and compare sets
+def _similarity_sql(spark, sf_dir):
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("pair_docs")
+    return sql_ext.sql(
+        spark,
+        """SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, similarity
+           FROM pair_docs a SIMILARITY JOIN pair_docs b
+             ON token_jaccard(a.text, b.text) >= 0.5 AND a.doc_id < b.doc_id""",
+    )
+
+
+# T.token_set_pairs itself and every caller, as a function of the table dir.
+_PAIR_CALLERS = {
+    "pairs": lambda spark, sf_dir: T.token_set_pairs(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", spark
+    ),
+    "jaccard": llm.l2_jaccard_pairs,
+    "containment": llm.l2_containment_join,
+    "sql": _similarity_sql,
+}
+
+
+@pytest.mark.parametrize("caller", sorted(_PAIR_CALLERS))
+def test_dense_regime_equals_sparse_regime(spark, tmp_path, monkeypatch, caller):
+    # small closed vocabulary: empty and NULL text, duplicate tokens,
+    # exact/near/disjoint pairs, contained sets and two EQUAL-size sets
+    # (containment must exclude them) — run each caller in BOTH
+    # regimes of the pair primitive and compare the full result sets
     texts = [
         "red green blue yellow",
         "red green blue yellow",          # exact dup of 1
-        "red green blue yellow purple",    # jac 4/5
+        "red green blue yellow purple",    # jac 4/5; contains 1
         "purple orange",                    # far
         "red red red green green blue yellow",  # dup tokens → same set as 1
         "cyan",
+        "",
+        None,
+        "cyan magenta",                     # contains 6
+        "red green blue black",             # same size as 1, jac 3/5
+        "orange purple",                    # same set as 4
     ]
-    df = _docs(spark, texts)
-    masks = T.dense_token_masks(df, "doc_id")
-    assert masks is not None
-    common = F.bit_count(F.col("a.__mask").bitwiseAND(F.col("b.__mask")))
-    jac = common.cast("double") / (F.col("a.__n") + F.col("b.__n") - common)
-    dense = (
-        T.mask_pair_scan(masks, "doc_id", spark)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.9)
-    )
-    sparse = _l2_jaccard_pairs_sparse(df)
-    d = {(r.doc_a, r.doc_b): r.jaccard for r in dense.collect()}
-    s = {(r.doc_a, r.doc_b): r.jaccard for r in sparse.collect()}
+    spark.createDataFrame(
+        [(i + 1, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    run = _PAIR_CALLERS[caller]
+    dense = run(spark, str(tmp_path))
+    monkeypatch.setattr(T, "DENSE_VOCAB_CAP", 0)
+    sparse = run(spark, str(tmp_path))
+    assert "BroadcastNestedLoopJoin" in dense._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in sparse._jdf.queryExecution().executedPlan().toString()
+    assert dense.schema.simpleString() == sparse.schema.simpleString()
+    d, s = sorted(map(tuple, dense.collect())), sorted(map(tuple, sparse.collect()))
     assert d == s
-    assert (1, 2) in d and (1, 5) in d and d[(1, 2)] == 1.0
+    if caller == "pairs":
+        # every pair sharing a token, none that share nothing
+        assert (1, 10, 4, 4, 3) in d and (4, 11, 2, 2, 2) in d
+        assert not any(a == 4 and b == 6 for a, b, *_ in d)
+        assert not any({a, b} & {7, 8} for a, b, *_ in d)  # token-less docs
+    elif caller == "containment":
+        assert (1, 3, 1.0) in d and (6, 9, 1.0) in d
+        # docs 1, 2 and 5 hold the same set: equal sizes never qualify
+        assert not any({a, b} <= {1, 2, 5} for a, b, _ in d)
+    else:
+        assert (1, 2, 1.0) in d and (1, 5, 1.0) in d and (4, 11, 1.0) in d
 
 
 def _loop_topk(q_ids, all_ids, S, k):

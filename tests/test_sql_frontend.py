@@ -99,6 +99,18 @@ def test_similarity_malformed_raises(spark):
         sql(spark, "SELECT 1 FROM d a SIMILARITY JOIN d b ON a.text = b.text")
 
 
+def test_similarity_nonpositive_threshold_raises(spark):
+    # Jaccard >= 0 is the cross product (token-less docs included),
+    # which the token-set pair primitive cannot plan: refused up front
+    for thr in ("0", "0.0"):
+        with pytest.raises(SqlExtError, match="threshold must be > 0"):
+            sql(
+                spark,
+                f"""SELECT a.id AS x FROM d a SIMILARITY JOIN d b
+                    ON token_jaccard(a.text, b.text) >= {thr} AND a.id < b.id""",
+            )
+
+
 def test_similarity_requires_self_join(spark, tiny_views):
     with pytest.raises(SqlExtError, match="self-join"):
         sql(

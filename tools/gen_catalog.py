@@ -9,6 +9,7 @@ docstring summary; the first 50 rows are the driver's grading window.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -31,7 +32,10 @@ def main() -> None:
         "| ---: | --- | --- | --- | --- |",
     ]
     for i, (name, spec) in enumerate(registry.REGISTRY.items(), 1):
-        doc = (spec.doc or "").split(".")[0].replace("\n", " ").replace("|", "/").strip()
+        # first sentence: ends at ". " or at the end of the docstring, so
+        # "≥ 0.9", "e.g." and module paths do not cut it short
+        doc = " ".join((spec.doc or "").split()).replace("|", "/")
+        doc = re.split(r"\.(?: |$)", doc, maxsplit=1)[0]
         if len(doc) > 110:
             doc = doc[:107] + "…"
         kind = "DuckDB SQL" if spec.oracle else "rows-only + golden/tests"
