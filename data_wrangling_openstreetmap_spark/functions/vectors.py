@@ -54,9 +54,9 @@ def euclidean(a: Column, b: Column) -> Column:
 # unrolled fixed-64 dot — lit(0.0) + a₁·b₁ + … left-associated, each
 # element cast to double first, bit-identical to ``dot``'s fold — was
 # implemented and measured for the O(n²) pair scans. It ran 3× SLOWER
-# than the interpreted HOF fold (l3_cosine_topk_hof 35.1 → 98.7 s warm
-# at sf0.1): the 128-element_at expression never reached whole-stage
-# codegen under the BroadcastNestedLoopJoin, and the interpreted
-# recursive eval of a depth-64 Add chain (boxing per node) loses badly
-# to the fold's tight specialized loop. Reverted; symmetric halving in
-# l3_cosine_topk_hof recovers the win instead.
+# than the interpreted HOF fold (an all-builtin exact k-NN self-join,
+# 35.1 → 98.7 s warm at sf0.1): the 128-element_at expression never
+# reached whole-stage codegen under the BroadcastNestedLoopJoin, and
+# the interpreted recursive eval of a depth-64 Add chain (boxing per
+# node) loses badly to the fold's tight specialized loop. Reverted;
+# exact cosine scoring runs in the Arrow kernels (operators/llm.py).

@@ -628,20 +628,16 @@ def l2_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index broadcasts once (size-guarded — fails loudly past
     Q10_INDEX_CAP_ROWS), queries stream through mapInPandas in Arrow
     batches, each batch one BLAS matmul, emitting only upper-triangle
-    pairs over the threshold. Scores round to 6 dp — numpy blocked
-    summation, Spark's fold and DuckDB's list_cosine_similarity agree
-    well past 1e-9 (the q10/l3_cosine_topk_hof shared-oracle
-    precedent). Measured 0.35 s warm (~100×), parity-verified at all
-    three SFs.
+    pairs over the threshold. Scores round to 6 dp with _round6 —
+    DuckDB's round by construction; numpy's blocked summation and
+    DuckDB's list_cosine_similarity agree well past 1e-9 (the q10
+    shared-oracle precedent). Measured 0.35 s warm (~100×),
+    parity-verified at all three SFs.
 
     Scale: past the broadcast cap the threshold query runs on
     l3_ann_lsh buckets (random-hyperplane partitioning) instead —
-    registered separately so the exact form stays gradable; the
-    pure-Catalyst pairwise formulation survives as
-    l3_cosine_topk_hof's documented reference shape.
+    registered separately so the exact form stays gradable.
     """
-    import numpy as np
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     ids_idx = _guarded_index_arrays(e)
     bc = spark.sparkContext.broadcast(ids_idx)
@@ -650,11 +646,10 @@ def l2_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         all_ids, idx = bc.value
         for pdf in batches:
             q_ids = pdf["vec_id"].to_numpy()
-            Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Q /= np.linalg.norm(Q, axis=1, keepdims=True)
+            Q = _embedding_matrix(pdf["embedding"], unit=True)
             # upper triangle only (vec_a < vec_b), threshold inline;
-            # index-column tiled (r13) so neither the score block nor
-            # the emission ever materializes whole per batch
+            # tiled so neither the score block nor the emission ever
+            # materializes whole per batch
             yield from _neardup_tiles(q_ids, all_ids, Q, idx, 0.4)
 
     return e.mapInPandas(
@@ -992,13 +987,13 @@ def _vectorized_topk(q_ids, all_ids, S, k):
     row loop was ~60% of q10's batch time at sf0.1; identical output —
     the self row is driven to −inf so it can only surface when a block
     holds fewer than k non-self candidates, and the final keep-mask
-    drops exactly those, mirroring the old mask-then-sort).
+    drops exactly those, mirroring the old mask-then-sort). S is
+    scratch: its self cells are overwritten.
 
     Returns (query_ids, neighbor_ids, scores) flat arrays.
     """
     import numpy as np
 
-    S = S.copy()
     S[q_ids[:, None] == all_ids[None, :]] = -np.inf
     order = np.lexsort((np.broadcast_to(all_ids, S.shape), -S), axis=1)[:, :k]
     rows = np.repeat(np.arange(S.shape[0]), order.shape[1])
@@ -1009,23 +1004,18 @@ def _vectorized_topk(q_ids, all_ids, S, k):
 
 
 # ---------------------------------------------------------------------------
-# In-kernel score-matrix tiling (optimization r13, VERDICT r12 §Next #1
-# / §What's-wrong #1): no Arrow kernel may materialize an unbounded
-# dense score block. The r12 kernels computed ONE B×B (or batch×index)
-# float64 matrix per group — fine at sf0.1 where B is a few hundred,
-# a guaranteed worker OOM at 100 TB for a hot LSH bucket, a fat IVF
-# cell, or a capped-but-large broadcast index (4M rows × 10k-row batch
-# = 320 GB of scores). Every matmul now runs in tiles of at most
-# _KERNEL_TILE_CELLS score cells (128 MiB of float64); whenever a group
-# fits one tile — every group of every fixture SF does — the tile slice
-# is a full-array numpy view, so the gemm call and therefore every
-# rounded double is BIT-IDENTICAL to the untiled r12 kernel (goldens
-# pin this). Multi-tile groups additionally cap what one group may
-# RETURN (_KERNEL_PAIR_EMIT_CAP): the all-pairs kernels' output is
-# inherently O(B²) rows held in the worker until Arrow ships them, so a
-# group that would emit more than the cap fails loudly with routing
-# advice instead of silently OOM-killing the executor (the
-# _guarded_index_arrays pattern).
+# Arrow score kernels: ONE tiled cosine-score primitive (_score_tiles)
+# and ONE rounder (_round6) behind every exact/ANN cosine kernel — q10,
+# l3_knn_block_matmul, l2_embedding_neardup, l2_semdedup, and the
+# l3_ann_lsh / l3_ann_ivf group pair frames. No kernel may materialize
+# an unbounded dense score block (a hot LSH bucket, a fat IVF cell, or
+# a capped-but-large broadcast index — 4M rows × 10k-row batch = 320 GB
+# of scores), so scores are produced in row tiles of at most
+# _KERNEL_TILE_CELLS cells (128 MiB of float64). The all-pairs kernels'
+# output is inherently O(B²) rows held in the worker until Arrow ships
+# them, so a group that would emit more than _KERNEL_PAIR_EMIT_CAP rows
+# fails loudly with routing advice instead of silently OOM-killing the
+# executor (the _guarded_index_arrays pattern).
 # ---------------------------------------------------------------------------
 
 _KERNEL_TILE_CELLS = 4096 * 4096  # ≤ 128 MiB of float64 per score tile
@@ -1033,14 +1023,64 @@ _KERNEL_TILE_CELLS = 4096 * 4096  # ≤ 128 MiB of float64 per score tile
 _KERNEL_PAIR_EMIT_CAP = 100_000_000  # pair rows one group may return (~2.4 GB)
 
 
-def _tile_steps(n_rows: int, n_cols: int):
-    """Row ranges [r0, r1) tiling an (n_rows × n_cols) score matrix so
-    each tile holds ≤ _KERNEL_TILE_CELLS cells (one range when the whole
-    matrix fits — the bit-identity fast path; single-row tiles when
-    n_cols alone exceeds the budget)."""
-    step = max(1, _KERNEL_TILE_CELLS // max(1, n_cols))
-    for r0 in range(0, n_rows, step):
-        yield r0, min(n_rows, r0 + step)
+def _round6(x):
+    """DuckDB's ``round(double, 6)`` by construction, elementwise: y =
+    x·1e6 rounded half away from zero (C's std::round — trunc plus a
+    copysign'd unit when the exact fraction y − trunc(y) is ≥ 0.5, so
+    −0.0 and small negatives keep the sign of zero), then ÷ 1e6; a
+    non-finite result returns the input. ``np.round`` rounds exact
+    halves to even (0.9000005 → 0.9 where DuckDB gives 0.900001), and
+    Spark's ``F.round`` (HALF_UP on the decimal expansion) is a third
+    answer — neither is the oracle's."""
+    import numpy as np
+
+    with np.errstate(over="ignore", invalid="ignore"):
+        y = x * 1e6
+        t = np.trunc(y)
+        y -= t  # the exact fraction; in place to bound tile temporaries
+        t += np.copysign(np.abs(y) >= 0.5, x)  # sign(x) == sign(y)
+        t /= 1e6
+    return np.where(np.isfinite(t), t, x)
+
+
+def _score_tiles(Q, X, q_norms=None, x_norms=None):
+    """Yield (r0, r1, S) row tiles of the rounded score matrix Q·Xᵀ —
+    S = _round6(Q[r0:r1] @ X.T), or with norms
+    _round6((Q[r0:r1] @ X.T) / outer(q_norms[r0:r1], x_norms)), the
+    JVM's dot/(nrm·nrm) term for term (l3_ann_lsh, l2_semdedup).
+
+    Each tile holds ≤ _KERNEL_TILE_CELLS cells (single-row tiles when
+    one row alone exceeds the budget). When the whole matrix fits —
+    every group and batch of every fixture SF — there is ONE tile over
+    full-array views (an empty Q still yields it), so the gemm call and
+    every rounded double are those of the untiled kernel. Multi-tile
+    inputs run a gemm per row slice, whose BLAS blocking may differ
+    from the full-matrix call in the last ulp; a score within half an
+    ulp of a 0.5e-6 rounding boundary could then round the other way
+    (the ANN kernels' id-pair min-agg dedup already tolerates that).
+    Row tiles need no merge: each query row's scores are complete
+    within its tile."""
+    import numpy as np
+
+    n = Q.shape[0]
+    step = max(1, _KERNEL_TILE_CELLS // max(1, X.shape[0]))
+    for r0 in range(0, max(1, n), step):
+        r1 = min(n, r0 + step)
+        S = Q[r0:r1] @ X.T
+        if q_norms is not None:
+            S = S / np.outer(q_norms[r0:r1], x_norms)
+        yield r0, r1, _round6(S)
+
+
+def _embedding_matrix(col, unit):
+    """float64 (n × d) matrix of an Arrow-batch embedding column (a
+    pandas Series of arrays); rows L2-normalized when ``unit``."""
+    import numpy as np
+
+    M = np.stack(col.to_numpy()).astype(np.float64)
+    if unit:
+        M /= np.linalg.norm(M, axis=1, keepdims=True)
+    return M
 
 
 def _guard_pair_emit(n_pairs: int, what: str, advice: str):
@@ -1051,57 +1091,20 @@ def _guard_pair_emit(n_pairs: int, what: str, advice: str):
         )
 
 
-def _bucket_pair_frame(ids, E, N):
-    """All ordered non-self pairs of one LSH bucket with rounded cosine
-    = (E·Eᵀ)/outer(N,N), row-tiled (l3_ann_lsh kernel core)."""
+def _pair_frame(q_ids, i_ids, Q, X, q_norms=None, x_norms=None, *, what, advice):
+    """All non-self (q, i) pairs of one group with their rounded score
+    (_score_tiles) — the l3_ann_lsh bucket and l3_ann_ivf cell kernel
+    core. The caller's ``what``/``advice`` word the loud emit guard."""
     import numpy as np
     import pandas as pd
 
-    B = len(ids)
-    _guard_pair_emit(
-        B * (B - 1),
-        "l3_ann_lsh",
-        "This bucket is degenerately hot — add hyperplanes (finer "
-        "buckets) or more tables; an all-pairs scan of it cannot fit "
-        "one worker.",
-    )
+    _guard_pair_emit(len(q_ids) * len(i_ids), what, advice)
     chunks = []
-    for r0, r1 in _tile_steps(B, B):
-        S = np.round((E[r0:r1] @ E.T) / np.outer(N[r0:r1], N), 6)
-        qi, ii = np.nonzero(ids[r0:r1, None] != ids[None, :])
-        chunks.append(
-            pd.DataFrame(
-                {"vec_id": ids[r0 + qi], "neighbor_id": ids[ii], "cosine": S[qi, ii]}
-            )
-        )
-    return pd.concat(chunks, ignore_index=True)
-
-
-def _cell_pair_frame(q_ids, i_ids, Qu, Iu):
-    """All (probe, assignment) non-self pairs of one IVF cell with
-    rounded cosine = Qu·Iuᵀ over unit vectors, row-tiled
-    (l3_ann_ivf kernel core)."""
-    import numpy as np
-    import pandas as pd
-
-    _guard_pair_emit(
-        len(q_ids) * len(i_ids),
-        "l3_ann_ivf",
-        "This cell is degenerately fat — raise n_cells (finer "
-        "quantizer) or lower nprobe/nassign; its probes×assignments "
-        "grid cannot fit one worker.",
-    )
-    chunks = []
-    for r0, r1 in _tile_steps(len(q_ids), len(i_ids)):
-        S = np.round(Qu[r0:r1] @ Iu.T, 6)
+    for r0, r1, S in _score_tiles(Q, X, q_norms, x_norms):
         qi, ii = np.nonzero(q_ids[r0:r1, None] != i_ids[None, :])
         chunks.append(
             pd.DataFrame(
-                {
-                    "vec_id": q_ids[r0 + qi],
-                    "neighbor_id": i_ids[ii],
-                    "cosine": S[qi, ii],
-                }
+                {"vec_id": q_ids[r0 + qi], "neighbor_id": i_ids[ii], "cosine": S[qi, ii]}
             )
         )
     return pd.concat(chunks, ignore_index=True)
@@ -1109,99 +1112,67 @@ def _cell_pair_frame(q_ids, i_ids, Qu, Iu):
 
 def _semdedup_dropped_frame(ids, E, N, threshold):
     """Ids dropped within one SemDeDup cell: vec y is dropped iff some
-    x with x.vec_id < y.vec_id has rounded cosine ≥ threshold —
-    computed as a row-tiled (E·Eᵀ)/outer(N,N) scan marking hit columns
-    (l2_semdedup kernel core). Output already distinct per group, and
-    cells partition the vectors, so no cross-group dedup is needed."""
+    x with x.vec_id < y.vec_id has rounded cosine ≥ threshold (l2_semdedup
+    kernel core). Output already distinct per group, and cells partition
+    the vectors, so no cross-group dedup is needed."""
     import numpy as np
     import pandas as pd
 
-    B = len(ids)
-    dropped = np.zeros(B, dtype=bool)
-    for r0, r1 in _tile_steps(B, B):
-        S = np.round((E[r0:r1] @ E.T) / np.outer(N[r0:r1], N), 6)
-        hit = (S >= threshold) & (ids[r0:r1, None] < ids[None, :])
-        dropped |= hit.any(axis=0)
+    dropped = np.zeros(len(ids), dtype=bool)
+    for r0, r1, S in _score_tiles(E, E, N, N):
+        dropped |= ((S >= threshold) & (ids[r0:r1, None] < ids[None, :])).any(axis=0)
     return pd.DataFrame({"vec_id": ids[dropped]})
 
 
 def _neardup_tiles(q_ids, all_ids, Q, idx, threshold):
-    """Upper-triangle (q < i) pairs with rounded cosine ≥ threshold,
-    generated one index-column tile at a time (l2_embedding_neardup
-    kernel core) — emission streams per tile through mapInPandas, so
-    neither the score block NOR the output ever materializes whole."""
+    """Upper-triangle (q < i) pairs with rounded cosine ≥ threshold, one
+    frame per score tile (l2_embedding_neardup kernel core) — emission
+    streams per tile through mapInPandas, so neither the score block NOR
+    the output ever materializes whole."""
     import numpy as np
     import pandas as pd
 
-    for c0, c1 in _tile_steps(idx.shape[0], max(1, len(q_ids))):
-        S = np.round(Q @ idx[c0:c1].T, 6)
-        qi, ii = np.nonzero(
-            (S >= threshold) & (q_ids[:, None] < all_ids[None, c0:c1])
-        )
+    for r0, r1, S in _score_tiles(Q, idx):
+        qi, ii = np.nonzero((S >= threshold) & (q_ids[r0:r1, None] < all_ids[None, :]))
         yield pd.DataFrame(
-            {"vec_a": q_ids[qi], "vec_b": all_ids[c0 + ii], "cosine": S[qi, ii]}
+            {"vec_a": q_ids[r0 + qi], "vec_b": all_ids[ii], "cosine": S[qi, ii]}
         )
 
 
 def _tiled_topk(q_ids, all_ids, Q, X, k):
-    """Top-k by (rounded cosine desc, id asc) of Q·Xᵀ over unit rows,
-    excluding self-pairs, never materializing more than one score tile.
-
-    Single-tile inputs (every fixture group/batch) take the exact
-    untiled r12 path — one gemm over full-array views + _vectorized_topk
-    — so results are bit-identical to the previous kernels. Multi-tile
-    inputs fold a running 2k-wide merge: the global top-k is the top-k
-    of per-tile top-ks (tiles partition the candidate set; order keys
-    and self-masking are per-tile identical), padded with −inf scores /
-    sentinel ids that can never outrank a real candidate.
-
-    Returns (query_ids, neighbor_ids, scores) flat arrays.
-    """
+    """(vec_id, neighbor_id, cosine) frame of each query's top-k by
+    (rounded cosine desc, id asc) over unit rows, excluding self-pairs:
+    one _vectorized_topk per _score_tiles row tile."""
     import numpy as np
+    import pandas as pd
 
-    n_idx = X.shape[0]
-    step = max(1, _KERNEL_TILE_CELLS // max(1, len(q_ids)))
-    if step >= n_idx:
-        S = np.round(Q @ X.T, 6)
-        return _vectorized_topk(q_ids, all_ids, S, k)
+    parts = [
+        _vectorized_topk(q_ids[r0:r1], all_ids, S, k)
+        for r0, r1, S in _score_tiles(Q, X)
+    ]
+    q, n, c = (np.concatenate(p) for p in zip(*parts))
+    return pd.DataFrame({"vec_id": q, "neighbor_id": n, "cosine": c})
 
-    sent_id = np.iinfo(np.int64).max  # ties at −inf lose to any real id
 
-    def local_topk_padded(c0, c1):
-        S = np.round(Q @ X[c0:c1].T, 6)
-        ids_t = all_ids[c0:c1]
-        S = S.copy()
-        S[q_ids[:, None] == ids_t[None, :]] = -np.inf
-        kk = min(k, S.shape[1])
-        order = np.lexsort((np.broadcast_to(ids_t, S.shape), -S), axis=1)[:, :kk]
-        sc = np.take_along_axis(S, order, axis=1)
-        idc = ids_t[order]
-        if kk < k:  # pad narrow tiles to k columns
-            pad = k - kk
-            sc = np.hstack([sc, np.full((sc.shape[0], pad), -np.inf)])
-            idc = np.hstack(
-                [idc, np.full((idc.shape[0], pad), sent_id, dtype=np.int64)]
-            )
-        idc = np.where(np.isneginf(sc), sent_id, idc)  # masked self slots
-        return sc, idc
+def _sided_cell_frame(pdf, id_col, vec_col, unit, kernel):
+    """Split one grouped cell into its 'q' and 'i' side rows and return
+    kernel(q_ids, i_ids, Q, X) — or a typed empty (vec_id, neighbor_id,
+    cosine) frame when either side is empty (l3_knn_block_matmul and
+    l3_ann_ivf cells)."""
+    import pandas as pd
 
-    best_s = best_i = None
-    for c0 in range(0, n_idx, step):
-        c1 = min(n_idx, c0 + step)
-        sc, idc = local_topk_padded(c0, c1)
-        if best_s is None:
-            best_s, best_i = sc, idc
-            continue
-        cat_s = np.hstack([best_s, sc])
-        cat_i = np.hstack([best_i, idc])
-        order = np.lexsort((cat_i, -cat_s), axis=1)[:, :k]
-        best_s = np.take_along_axis(cat_s, order, axis=1)
-        best_i = np.take_along_axis(cat_i, order, axis=1)
-    rows = np.repeat(np.arange(best_s.shape[0]), best_s.shape[1])
-    flat_s = best_s.ravel()
-    flat_i = best_i.ravel()
-    keep = ~np.isneginf(flat_s)
-    return q_ids[rows[keep]], flat_i[keep], flat_s[keep]
+    q = pdf[pdf["side"] == "q"]
+    i = pdf[pdf["side"] == "i"]
+    if q.empty or i.empty:
+        return pd.DataFrame(
+            {"vec_id": [], "neighbor_id": [], "cosine": []}
+        ).astype({"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64"})
+    return kernel(
+        q[id_col].to_numpy(),
+        i[id_col].to_numpy(),
+        _embedding_matrix(q[vec_col], unit),
+        _embedding_matrix(i[vec_col], unit),
+    )
 
 
 @register("q10_cosine_topk", oracle=_Q10_ORACLE, tags=("L3", "U2", "W2"))
@@ -1220,96 +1191,23 @@ def q10_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     unguarded full-table collect); past the cap the operator fails
     loudly and routes to l3_knn_block_matmul (distributed exact, same
     oracle) or the ANN paths (l3_ann_lsh / l3_ann_ivf).
-    Scores round to 6 dp — numpy's blocked summation, Spark's fold,
-    and DuckDB's list_cosine_similarity agree well past 1e-9.
+    Scores round to 6 dp with _round6 (DuckDB's round by construction);
+    numpy's blocked summation and DuckDB's list_cosine_similarity agree
+    well past 1e-9.
     """
-    import numpy as np
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     ids_idx = _guarded_index_arrays(e)
     bc = spark.sparkContext.broadcast(ids_idx)
     k = 5
 
     def topk(batches):
-        import pandas as pd
-
         all_ids, idx = bc.value
         for pdf in batches:
             q_ids = pdf["vec_id"].to_numpy()
-            Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-            out_q, out_n, out_c = _tiled_topk(q_ids, all_ids, Q, idx, k)
-            yield pd.DataFrame(
-                {"vec_id": out_q, "neighbor_id": out_n, "cosine": out_c}
-            )
+            Q = _embedding_matrix(pdf["embedding"], unit=True)
+            yield _tiled_topk(q_ids, all_ids, Q, idx, k)
 
     return e.mapInPandas(topk, "vec_id bigint, neighbor_id bigint, cosine double")
-
-
-@register("l3_cosine_topk_hof", oracle=_Q10_ORACLE, tags=("L3", "J8", "W2"))
-def l3_cosine_topk_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact k-NN, all-builtin formulation: self-join + zip_with
-    fold dot + window top-k. Norms are precomputed per row (O(n·d)) so
-    the pair loop is a dot product only; tie-break on rounded score
-    then neighbor id. Kept registered alongside the matmul form as the
-    pure-Catalyst reference: O(n²·d) with no Python boundary, and the
-    recall oracle for l3_ann_lsh.
-
-    Optimization r13 (VERDICT r12 §Next #6): SYMMETRIC HALVING — the
-    join scans a.vec_id < b.vec_id (half the pairs), scores each
-    unordered pair ONCE, and mirrors it with a 2-struct explode.
-    cos(a,b) is BIT-identical to cos(b,a): the per-element products of
-    the zip_with commute (IEEE multiply), the fold visits them in the
-    same order, and nrm_a·nrm_b commutes — so every (vec_id, neighbor)
-    cosine and every rank is unchanged (goldens + 3-SF oracle parity
-    pin it). The cosine is projected to an attribute BEFORE the
-    explode so it evaluates once per half-pair (CollapseProject keeps
-    a non-cheap alias referenced twice), and the explode takes the
-    inline array expression so InferFiltersFromGenerate cannot inline
-    anything below it (the l2_bbit_minhash r13 lesson). 35.1 → 19.9 s
-    warm at sf0.1 — the remaining cost is the interpreted HOF fold on
-    n²/2 pairs, which is this operator's documented point (the
-    all-builtin contrast to q10's Arrow kernel); an unrolled fixed-64
-    codegen dot was tried and measured 3× SLOWER (98.7 s — the flat
-    128-element_at expression never reaches whole-stage codegen under
-    the BNLJ), so the fold stays.
-    """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", V.norm(F.col("embedding")).alias("nrm")
-    )
-    a, b = e.alias("a"), e.alias("b")
-    cos = F.round(
-        V.dot(F.col("a.embedding"), F.col("b.embedding"))
-        / (F.col("a.nrm") * F.col("b.nrm")),
-        6,
-    )
-    half = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
-        F.col("a.vec_id").alias("ida"),
-        F.col("b.vec_id").alias("idb"),
-        cos.alias("cosine"),
-    )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("ida").alias("vec_id"),
-                    F.col("idb").alias("neighbor_id"),
-                    F.col("cosine"),
-                ),
-                F.struct(
-                    F.col("idb").alias("vec_id"),
-                    F.col("ida").alias("neighbor_id"),
-                    F.col("cosine"),
-                ),
-            )
-        ).alias("pr")
-    ).select("pr.vec_id", "pr.neighbor_id", "pr.cosine")
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("vec_id", "neighbor_id", "cosine")
-    )
 
 
 @register("l3_knn_block_matmul", oracle=_Q10_ORACLE, tags=("L3", "U3", "W2"))
@@ -1350,23 +1248,9 @@ def l3_knn_block_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = q_rep.unionByName(i_rep)
 
     def cell_topk(pdf):
-        import numpy as np
-        import pandas as pd
-
-        q = pdf[pdf["side"] == "q"]
-        i = pdf[pdf["side"] == "i"]
-        if q.empty or i.empty:
-            return pd.DataFrame(
-                {"vec_id": [], "neighbor_id": [], "cosine": []}
-            ).astype({"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64"})
-        q_ids = q["vec_id"].to_numpy()
-        i_ids = i["vec_id"].to_numpy()
-        Q = np.stack(q["embedding"].to_numpy()).astype(np.float64)
-        X = np.stack(i["embedding"].to_numpy()).astype(np.float64)
-        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-        X /= np.linalg.norm(X, axis=1, keepdims=True)
-        out_q, out_n, out_c = _tiled_topk(q_ids, i_ids, Q, X, k)
-        return pd.DataFrame({"vec_id": out_q, "neighbor_id": out_n, "cosine": out_c})
+        return _sided_cell_frame(
+            pdf, "vec_id", "embedding", True, lambda *qx: _tiled_topk(*qx, k)
+        )
 
     partials = tagged.groupBy("qb", "ib").applyInPandas(
         cell_topk, "vec_id bigint, neighbor_id bigint, cosine double"
@@ -1390,6 +1274,13 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
 
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
+
+
+_LSH_GUARD = dict(
+    what="l3_ann_lsh",
+    advice="This bucket is degenerately hot — add hyperplanes (finer "
+    "buckets) or more tables; an all-pairs scan of it cannot fit one worker.",
+)
 
 
 @register("l3_ann_lsh", oracle=None, tags=("L3",))
@@ -1458,9 +1349,9 @@ def l3_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
 
         ids = pdf["vec_id"].to_numpy()
-        E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        E = _embedding_matrix(pdf["embedding"], unit=False)
         N = pdf["nrm"].to_numpy().astype(np.float64)
-        return _bucket_pair_frame(ids, E, N)
+        return _pair_frame(ids, ids, E, E, N, N, **_LSH_GUARD)
 
     # Collapse multi-table collisions of the same pair on the ID PAIR,
     # not on (ids, cosine): per-group BLAS matmuls of different shapes
@@ -1489,6 +1380,14 @@ def l3_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # L3 — IVF (inverted-file) approximate NN: the other standard ANN scale
 # path (coarse k-means cells + multi-probe), complementing the LSH one.
 # ---------------------------------------------------------------------------
+
+
+_IVF_GUARD = dict(
+    what="l3_ann_ivf",
+    advice="This cell is degenerately fat — raise n_cells (finer quantizer) "
+    "or lower nprobe/nassign; its probes×assignments grid cannot fit one "
+    "worker.",
+)
 
 
 @register("l3_ann_ivf", oracle=None, tags=("L3",))
@@ -1630,21 +1529,10 @@ def l3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("u"),
     )
 
-    def cell_pairs(pdf):
-        import numpy as np
-        import pandas as pd
-
-        q = pdf[pdf["side"] == "q"]
-        i = pdf[pdf["side"] == "i"]
-        if q.empty or i.empty:
-            return pd.DataFrame(
-                {"vec_id": [], "neighbor_id": [], "cosine": []}
-            ).astype({"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64"})
-        q_ids = q["vid"].to_numpy()
-        i_ids = i["vid"].to_numpy()
-        Qu = np.stack(q["u"].to_numpy())
-        Iu = np.stack(i["u"].to_numpy())
-        return _cell_pair_frame(q_ids, i_ids, Qu, Iu)
+    def cell_pairs(pdf):  # u is already unit-length (V.l2_normalize)
+        return _sided_cell_frame(
+            pdf, "vid", "u", False, lambda *qx: _pair_frame(*qx, **_IVF_GUARD)
+        )
 
     # id-pair dedup instead of DISTINCT over (ids, cosine) — see
     # l3_ann_lsh (ADVICE r12 #1): collapses a multi-assignment copy even
@@ -6422,17 +6310,16 @@ def l2_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through the interpreted zip_with/aggregate HOF dot (the exact
     # class the r12 ANN kernels left this operator in — measured 4.4 s
     # at sf0.1). One tiled Arrow matmul per cell now marks dropped ids
-    # directly (guide §4.2); scores are np.round of the gemm against
-    # the identical dot/(nrm·nrm) formula — the established
-    # q10/l2_embedding_neardup numeric-exact precedent, pinned by the
-    # unchanged golden + oracle parity at three SFs. Cells partition
-    # the vectors, so per-group-distinct dropped ids need no global
-    # DISTINCT exchange.
+    # directly (guide §4.2); scores are _round6 of the gemm against
+    # the identical dot/(nrm·nrm) formula — DuckDB's round by
+    # construction, pinned by the golden + oracle parity at three SFs.
+    # Cells partition the vectors, so per-group-distinct dropped ids
+    # need no global DISTINCT exchange.
     def drop_kernel(pdf):
         import numpy as np
 
         ids = pdf["vec_id"].to_numpy()
-        E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        E = _embedding_matrix(pdf["embedding"], unit=False)
         N = pdf["nrm"].to_numpy().astype(np.float64)
         return _semdedup_dropped_frame(ids, E, N, _SEMDEDUP_COS)
 

@@ -5,11 +5,14 @@ oracles and the pre-change golden snapshots; these tests additionally
 pin the NEW internals' edge behavior the fixture cannot exercise:
 
 - the in-kernel score-matrix tiling (VERDICT r12 §Next #1): every
-  fixture group fits ONE tile, so the multi-tile merge paths need
-  synthetic hot groups. Tiling tests use INTEGER-valued embeddings —
-  integer float64 matmuls are exact regardless of BLAS summation
-  order, so tiled and untiled results must match BITWISE and the
-  comparison cannot flake on gemm blocking;
+  fixture group fits ONE tile of _score_tiles, so the multi-tile paths
+  need synthetic hot groups. Tiling tests use INTEGER-valued
+  embeddings — integer float64 matmuls are exact regardless of BLAS
+  summation order, so tiled and untiled results must match BITWISE and
+  the comparison cannot flake on gemm blocking; expected scores are
+  built with _round6;
+- _round6 is DuckDB's round(double, 6): an exact-half score (0.9000005)
+  rounds UP to 0.900001 in every kernel, where np.round gave 0.9;
 - the loud pair-emit guard on the all-pairs kernels;
 - the composed shingle fold (VERDICT r12 §Next #2): value identity
   with the per-shingle string fold on adversarial token shapes
@@ -20,7 +23,9 @@ pin the NEW internals' edge behavior the fixture cannot exercise:
   Jaccard pairs (VERDICT r12 §Next #4);
 - the NTZ lint: no `unix_micros` survives anywhere in package source
   (VERDICT r12 §Next #3 — the st14 session-timezone class; the one
-  sanctioned spelling is _helpers.ntz_epoch_us).
+  sanctioned spelling is _helpers.ntz_epoch_us);
+- the score-kernel lint: `np.round(` appears in package source only
+  inside _round6, and there is one tile generator.
 """
 
 from __future__ import annotations
@@ -36,10 +41,10 @@ from pyspark.sql import functions as F
 from data_wrangling_openstreetmap_spark.functions import text as T
 from data_wrangling_openstreetmap_spark.operators import llm
 from data_wrangling_openstreetmap_spark.operators.llm import (
-    _bucket_pair_frame,
-    _cell_pair_frame,
     _codepoint_fold,
     _neardup_tiles,
+    _pair_frame,
+    _round6,
     _semdedup_dropped_frame,
     _shingle_hash_col,
     _tiled_topk,
@@ -66,8 +71,8 @@ def test_bucket_pair_frame_tiled_equals_untiled(tiny_tiles):
     ids = np.arange(1, 13, dtype=np.int64)
     E = _int_embeddings(12, 4, seed=1)
     N = np.sqrt((E * E).sum(axis=1))
-    got = _bucket_pair_frame(ids, E, N)
-    S = np.round((E @ E.T) / np.outer(N, N), 6)
+    got = _pair_frame(ids, ids, E, E, N, N, **llm._LSH_GUARD)
+    S = _round6((E @ E.T) / np.outer(N, N))
     qi, ii = np.nonzero(ids[:, None] != ids[None, :])
     want = pd.DataFrame(
         {"vec_id": ids[qi], "neighbor_id": ids[ii], "cosine": S[qi, ii]}
@@ -87,8 +92,8 @@ def test_cell_pair_frame_tiled_equals_untiled(tiny_tiles):
     X = _int_embeddings(11, 4, seed=3)
     Qu = Q / np.linalg.norm(Q, axis=1, keepdims=True)
     Iu = X / np.linalg.norm(X, axis=1, keepdims=True)
-    got = _cell_pair_frame(q_ids, i_ids, Qu, Iu)
-    S = np.round(Qu @ Iu.T, 6)
+    got = _pair_frame(q_ids, i_ids, Qu, Iu, **llm._IVF_GUARD)
+    S = _round6(Qu @ Iu.T)
     qi, ii = np.nonzero(q_ids[:, None] != i_ids[None, :])
     want = pd.DataFrame(
         {"vec_id": q_ids[qi], "neighbor_id": i_ids[ii], "cosine": S[qi, ii]}
@@ -108,7 +113,7 @@ def test_semdedup_dropped_tiled_equals_bruteforce(tiny_tiles):
     want = set()
     for i in range(8):
         for j in range(8):
-            cos = round(float(E[i] @ E[j] / (N[i] * N[j])), 6)
+            cos = _round6(E[i] @ E[j] / (N[i] * N[j]))
             if ids[i] < ids[j] and cos >= 0.9:
                 want.add(int(ids[j]))
     assert got == want and want  # non-vacuous: integer vectors collide
@@ -122,7 +127,7 @@ def test_neardup_tiles_tiled_equals_untiled(tiny_tiles):
     got = pd.concat(
         list(_neardup_tiles(q_ids, all_ids, Q, Q, 0.4)), ignore_index=True
     )
-    S = np.round(Q @ Q.T, 6)
+    S = _round6(Q @ Q.T)
     qi, ii = np.nonzero((S >= 0.4) & (q_ids[:, None] < all_ids[None, :]))
     want = pd.DataFrame(
         {"vec_a": q_ids[qi], "vec_b": all_ids[ii], "cosine": S[qi, ii]}
@@ -146,10 +151,10 @@ def test_tiled_topk_equals_vectorized_topk(tiny_tiles, n_idx):
     Qu = Q / np.linalg.norm(Q, axis=1, keepdims=True)
     Xu = X / np.linalg.norm(X, axis=1, keepdims=True)
     got = _tiled_topk(q_ids, all_ids, Qu, Xu, k)
-    S = np.round(Qu @ Xu.T, 6)
+    S = _round6(Qu @ Xu.T)
     want = _vectorized_topk(q_ids, all_ids, S, k)
-    for g, w in zip(got, want):
-        np.testing.assert_array_equal(np.asarray(g), np.asarray(w))
+    for col, w in zip(("vec_id", "neighbor_id", "cosine"), want):
+        np.testing.assert_array_equal(got[col].to_numpy(), w)
 
 
 def test_pair_emit_guard_raises_loudly(monkeypatch):
@@ -158,9 +163,34 @@ def test_pair_emit_guard_raises_loudly(monkeypatch):
     E = _int_embeddings(7, 3, seed=8)
     N = np.sqrt((E * E).sum(axis=1))
     with pytest.raises(ValueError, match="l3_ann_lsh"):
-        _bucket_pair_frame(ids, E, N)
+        _pair_frame(ids, ids, E, E, N, N, **llm._LSH_GUARD)
     with pytest.raises(ValueError, match="l3_ann_ivf"):
-        _cell_pair_frame(ids, ids + 100, E, E)
+        _pair_frame(ids, ids + 100, E, E, **llm._IVF_GUARD)
+
+
+def test_semdedup_exact_half_score_rounds_like_duckdb():
+    """cos(1, 2) = 0.9000005 exactly at the double level (N = 1, so the
+    divide is exact): DuckDB's round(·, 6) gives 0.900001 ≥ threshold,
+    so id 2 is dropped; np.round's half-to-even gave 0.9 and kept it."""
+    ids = np.array([1, 2], dtype=np.int64)
+    E = np.array([[1.0, 0.0], [0.9000005, 0.25]])
+    N = np.array([1.0, 1.0])
+    got = _semdedup_dropped_frame(ids, E, N, 0.900001)
+    assert got["vec_id"].tolist() == [2]
+
+
+def test_pair_frame_emits_duckdb_rounded_cosine():
+    import duckdb
+
+    q_ids = np.array([1], dtype=np.int64)
+    i_ids = np.array([2], dtype=np.int64)
+    Qu = np.array([[1.0, 0.0]])
+    Iu = np.array([[0.9000005, 0.25]])
+    got = _pair_frame(q_ids, i_ids, Qu, Iu, **llm._IVF_GUARD)
+    with duckdb.connect() as con:
+        (want,) = con.execute("SELECT round(0.9000005::DOUBLE, 6)").fetchone()
+    assert want == 0.900001
+    assert got["cosine"].tolist() == [want]
 
 
 def test_composed_shingle_fold_equals_string_fold(spark):
@@ -227,12 +257,14 @@ def test_ivf_assignment_accumulation_bit_identical(spark):
 
 
 def test_dot_commutes_bitwise(spark):
-    """l3_cosine_topk_hof's r13 symmetric halving scores each unordered
-    pair once and mirrors it — sound only if dot(a,b) is BIT-identical
-    to dot(b,a). The per-element products of the zip_with commute and
-    the fold visits them in the same order, so they must match bitwise;
-    random float32 inputs (the production array<float> element type)
-    plus signed-zero rows pin it on the real evaluation path."""
+    """V.dot and V.norm products commute BITWISE: dot(a,b) is
+    bit-identical to dot(b,a) (the per-element products of the zip_with
+    commute and the fold visits them in the same order), and
+    norm(a)·norm(b) to norm(b)·norm(a) — so a JVM-side cosine, like
+    l3_ann_lsh's bucket hash or the norms its Arrow kernel divides by,
+    never depends on which side of a pair is which. Random float32
+    inputs (the production array<float> element type) plus signed-zero
+    rows pin it on the real evaluation path."""
     from data_wrangling_openstreetmap_spark.functions import vectors as V
 
     rng = np.random.RandomState(7)
@@ -363,3 +395,42 @@ def test_no_unix_micros_in_package_source():
                     if "unix_micros" in line:
                         offenders.append((rel, lineno, line.strip()))
     assert not offenders, f"unix_micros on (potentially) NTZ inputs: {offenders}"
+
+
+def test_score_kernels_round_and_tile_in_one_place():
+    """The score-kernel lint: every Arrow cosine kernel rounds through
+    operators/llm.py::_round6 (DuckDB's round(double, 6) by
+    construction) and tiles through the one generator _score_tiles —
+    the only function that reads the tile budget. A bare `np.round(`
+    anywhere else in package source is a half-to-even rounding that
+    disagrees with the oracle on exact halves."""
+    import ast
+
+    import data_wrangling_openstreetmap_spark as pkg
+
+    root = os.path.dirname(os.path.abspath(pkg.__file__))
+    offenders, tilers = [], []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as fh:
+                src = fh.read()
+            allowed = set()
+            for node in ast.walk(ast.parse(src)):
+                if not isinstance(node, ast.FunctionDef):
+                    continue
+                if node.name == "_round6":
+                    allowed.update(range(node.lineno, node.end_lineno + 1))
+                if any(
+                    isinstance(n, ast.Name) and n.id == "_KERNEL_TILE_CELLS"
+                    for n in ast.walk(node)
+                ):
+                    tilers.append((rel, node.name))
+            for lineno, line in enumerate(src.splitlines(), 1):
+                if "np.round(" in line and lineno not in allowed:
+                    offenders.append((rel, lineno, line.strip()))
+    assert not offenders, f"np.round outside _round6: {offenders}"
+    assert tilers == [("operators/llm.py", "_score_tiles")], tilers

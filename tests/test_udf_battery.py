@@ -563,6 +563,49 @@ def test_battery_carries_the_verdicts_adversarial_classes():
     assert any(v >= (1 << 50) for _, v in ADV_INTS), "large int64 midpoints"
 
 
+def _round6_values():
+    """Adversarial doubles for the Arrow score kernels' rounder: every
+    exact binary half (k + 0.5)/1e6 for k in [-2000, 2000), both
+    nextafter neighbours of each, signed zeros, the largest double
+    below 0.5, ±1, magnitudes whose ×1e6 stays finite (±1e300) or
+    overflows (±1.7e308, the return-the-input branch), subnormals, and
+    uniform randoms."""
+    import numpy as np
+
+    h = (np.arange(-2000, 2000, dtype=np.float64) + 0.5) / 1e6
+    special = [0.0, -0.0, 0.49999999999999994, -0.49999999999999994,
+               1.0, -1.0, 1e300, -1e300, 1.7e308, -1.7e308, 5e-324, -5e-324]
+    rand = np.random.RandomState(13).uniform(-1.0, 1.0, 20000)
+    return np.concatenate(
+        [h, np.nextafter(h, np.inf), np.nextafter(h, -np.inf), special, rand]
+    )
+
+
+def test_round6_matches_duckdb_round_bitwise():
+    """operators/llm.py::_round6 IS DuckDB's round(double, 6) — compared
+    elementwise on the raw 64-bit patterns, so the sign of zero counts.
+    np.round (half to even) misses ~2k of the exact halves here."""
+    import numpy as np
+
+    from data_wrangling_openstreetmap_spark.operators.llm import _round6
+
+    vals = _round6_values()
+    battery = pd.DataFrame({"rid": np.arange(len(vals)), "v": vals})
+    con = duckdb.connect()
+    try:
+        want = con.execute(
+            "SELECT round(v, 6) AS r FROM battery ORDER BY rid"
+        ).fetchdf()["r"].to_numpy(dtype=np.float64)
+    finally:
+        con.close()
+    got = _round6(vals)
+    bad = np.flatnonzero(got.view(np.int64) != want.view(np.int64))
+    assert not len(bad), [(vals[i], got[i], want[i]) for i in bad[:10]]
+    assert np.signbit(got[vals == 0.0]).sum() == 1  # -0.0 stays -0.0
+    with np.errstate(over="ignore"):
+        assert (np.round(vals, 6) != want).sum() > 1000  # the battery bites
+
+
 # ---------------------------------------------------------------------------
 # Per-TRANSPORT coverage closure (round 12, VERDICT r11 What's-missing
 # #3): a battery entry pins a BODY through the transport its builder
