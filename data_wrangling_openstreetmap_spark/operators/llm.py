@@ -1390,11 +1390,50 @@ _IVF_GUARD = dict(
 )
 
 
+def _train_quantizer(X, k, iters=8, seed=7):
+    """IVF coarse quantizer: seeded k-means++ init, then ``iters``
+    Euclidean Lloyd rounds over the rows of X (n × d). Returns the
+    min(k, n) × d centroid matrix. Squared distances use the matmul form
+    ‖x‖² − 2x·c + ‖c‖²; a cell that loses every row keeps its previous
+    centroid. All-identical rows give zero k-means++ weights, so the
+    next seed is then drawn uniformly."""
+    import numpy as np
+
+    X = np.asarray(X, dtype=np.float64)
+    n = len(X)
+    k = min(k, n)
+    if k == 0:
+        return X[:0]
+    rng = np.random.default_rng(seed)
+    x_sq = np.einsum("ij,ij->i", X, X)
+
+    def sq_dist(C):
+        d2 = x_sq[:, None] - 2.0 * (X @ C.T) + np.einsum("ij,ij->i", C, C)[None, :]
+        return np.maximum(d2, 0.0)
+
+    C = np.empty((k, X.shape[1]), dtype=np.float64)
+    C[0] = X[rng.integers(n)]
+    d2 = sq_dist(C[:1])[:, 0]
+    for j in range(1, k):
+        total = d2.sum()
+        C[j] = X[rng.choice(n, p=d2 / total) if total > 0 else rng.integers(n)]
+        d2 = np.minimum(d2, sq_dist(C[j : j + 1])[:, 0])
+    for _ in range(iters):
+        label = sq_dist(C).argmin(axis=1)
+        counts = np.bincount(label, minlength=k)
+        sums = np.zeros_like(C)
+        np.add.at(sums, label, X)
+        kept = counts > 0
+        C[kept] = sums[kept] / counts[kept, None]
+    return C
+
+
 @register("l3_ann_ivf", oracle=None, tags=("L3",))
 def l3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 cosine neighbors via IVF: a coarse k-means
-    quantizer (32 cells) trained with pyspark.ml KMeans **on a seeded
-    sample**, each index vector assigned to its `nassign`=2 nearest
+    quantizer (32 cells) trained on the driver (_train_quantizer:
+    seeded k-means++ + 8 Lloyd rounds) **on a bounded hash sample**,
+    each index vector assigned to its `nassign`=2 nearest
     cells (multi-assignment — the standard boundary-case fix: a true
     neighbor straddling a cell border is reachable through either
     copy), each query probing its `nprobe`=8 nearest cells; candidates
@@ -1403,11 +1442,13 @@ def l3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambdas, 27 s at sf0.1) — then dedup on the id pair (min-agg,
     ADVICE r12 #1).
 
-    Scale contract (every stage distributed — nothing collects the
-    table):
-    - quantizer: ``df.sample(seed)`` caps the training set; only the 32
-      centroid vectors (32×64 doubles) ever reach the driver, then
-      broadcast back as a literal dimension frame;
+    Scale contract (a training sample of ≤ 256·n_cells unit rows
+    (≤ 4 MB) reaches the driver; the table never does):
+    - quantizer: the rows with an even ``xxhash64(vec_id, 7)``, ordered
+      by (that hash, vec_id) and capped at 256·n_cells = 8,192 unit
+      vectors, come back in ONE TakeOrderedAndProject job at any table
+      size (no count: kk = min(n_cells, sample rows)); the 32×64
+      centroid matrix is trained in numpy next to them;
     - assignment + probes: the 32×64 centroid matrix broadcasts to an
       Arrow kernel that scores a whole batch per numpy pass and ranks
       in-kernel (r13; scores accumulate dimension-by-dimension — the
@@ -1424,32 +1465,35 @@ def l3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe/nassign trade cost for recall; round-12 tuning (VERDICT r11
     §Next 7) measured recall@5 vs exact: 16 cells/nprobe 4/nassign 1
     (the prior setting) 0.547 sf0.01 / 0.554 sf0.1; the shipped
-    32/8/2 measures 0.830 / 0.818 — ≥ 0.70 with margin at both SFs.
+    32/8/2 with the driver-side trainer measures 0.816 sf0.001 /
+    0.822 sf0.01 / 0.819 sf0.1 — ≥ 0.70 with margin at all three SFs.
 
     Oracle conversion CLOSED (VERDICT r7 §Next #6): the quantizer is a
-    sampled KMeans model with no DuckDB image; the value contract
-    (recall vs exact) is driver-graded via l3_ann_recall_contract.
-    Round-8 arrival-order audit: this is the registry's ONE
-    layout-dependent query — df.sample's Bernoulli draw depends on
-    partition layout, so centroids (hence neighbor sets) vary with
-    arrival order while the recall contract stays green under any
-    layout (docs/ROUND8_NOTES.md §11).
+    sampled k-means model with no DuckDB image; the value contract
+    (recall vs exact) is driver-graded via l3_ann_recall_contract. The
+    training set is chosen and ordered by (xxhash64, vec_id), never by
+    partition layout, so the result is arrival-order independent
+    (tests/test_arrival_order.py pins it). An empty table trains zero
+    cells and returns the typed empty frame.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    import numpy as np
 
     n_cells, nprobe, nassign, k = 32, 8, 2, 5
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     unit = e.select("vec_id", V.l2_normalize(F.col("embedding")).alias("u"))
 
-    # Coarse quantizer on a seeded half sample (at 100 TB this fraction
-    # shrinks to whatever ~10⁵ training vectors cost; the contract is
-    # the same: the full table is never collected).
-    train = unit.sample(fraction=0.5, seed=7).select(
-        array_to_vector("u").alias("features")
+    # Coarse quantizer on a bounded, seeded half sample: one job brings
+    # back at most 256 training rows per cell, whatever the table size.
+    h = F.xxhash64("vec_id", F.lit(7))
+    rows = (
+        unit.where(F.pmod(h, F.lit(2)) == 0)
+        .orderBy(h, "vec_id")
+        .limit(256 * n_cells)
+        .select("u")
+        .collect()
     )
-    kk = min(n_cells, train.count())
-    model = KMeans(k=kk, seed=7, maxIter=8).fit(train)
+    cmat = _train_quantizer([r.u for r in rows], n_cells)
+    kk = len(cmat)
 
     # Rank every (vector, centroid) pair by dot product: rank 1 = the
     # vector's home cell, ranks 1..nprobe = the cells it probes.
@@ -1465,11 +1509,6 @@ def l3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the (score desc, cell asc) ranks cannot move (goldens +
     # recall contract pin it; -0.0 == 0.0 ties fall to the cell key on
     # both engines).
-    import numpy as np
-
-    cmat = np.array(
-        [[float(x) for x in c] for c in model.clusterCenters()], dtype=np.float64
-    )
     bc_c = spark.sparkContext.broadcast(cmat)
     n_rank = min(nprobe, kk)
 
@@ -3440,9 +3479,10 @@ def l3_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the exact broadcast-matmul k-NN (q10) must stay ≥ 0.70 per
     method (floor raised from 0.45 in round 12 per VERDICT r11 §Next 7
     after tuning: LSH 12 tables × 4 planes measures 0.812 at sf0.01 /
-    0.855 at sf0.1; IVF 32 cells, nprobe=8, nassign=2 measures 0.830 /
-    0.818 — both deterministic under their fixed seeds, both with
-    ≥ 0.11 margin at both graded SFs). Recall here is micro-averaged:
+    0.855 at sf0.1; IVF 32 cells, nprobe=8, nassign=2 with the
+    driver-side quantizer measures 0.822 / 0.819 — both deterministic
+    under their fixed seeds, both with ≥ 0.11 margin at both graded
+    SFs). Recall here is micro-averaged:
     |ANN ∩ exact| / |exact| over all (query, neighbor) pairs.
 
     Scale: the contract reuses each method's own plan; the comparison
@@ -6123,8 +6163,8 @@ def l0_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (bit-identical doubles); assignment #2 folds (x − m)² sequentially
 # per row on both engines (Spark F.aggregate and DuckDB list_sum are
 # both in-order folds — pinned by this oracle at three scale factors).
-# The from-scratch twin of the sampled KMeans l3_ann_ivf takes from
-# pyspark.ml.
+# The distributed, oracle-exact twin of the sampled k-means l3_ann_ivf
+# trains on the driver (_train_quantizer).
 # ---------------------------------------------------------------------------
 
 _KM_K = 8
@@ -6194,7 +6234,7 @@ def l6_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: this IS production Lloyd's — per-round cost is one broadcast
     of k·d centroid doubles (collected driver-side: 512 values,
-    bounded, the same pattern pyspark.ml's KMeans uses every iteration)
+    bounded, the same per-iteration pattern as any distributed Lloyd's)
     plus one map-side assignment pass and one (cluster, dim)-keyed agg
     whose key space is k·d, uniform. No all-pairs joins, no global
     sorts. Determinism: centroid means are exact integer-sum/count

@@ -92,3 +92,17 @@ def test_driver_window_is_arrival_order_independent(spark, monkeypatch):
             failures.append(f"{name}: {len(baseline)} vs {len(scrambled)} rows, first diffs {diff}")
     monkeypatch.undo()
     assert not failures, "\n".join(failures)
+
+
+def test_ann_ivf_is_arrival_order_independent(spark, monkeypatch):
+    """l3_ann_ivf is outside DRIVER_WINDOW (no oracle; rows-only
+    graded), so it gets its own scramble: the quantizer's training set is
+    chosen and ordered by (xxhash64(vec_id, 7), vec_id), never by
+    partition layout, so the neighbor rows must not move."""
+    _ensure_loaded()
+    fn = REGISTRY["l3_ann_ivf"].fn
+    baseline = _rows(fn(spark, SF))
+    for mod in ALL_MODULES:
+        if hasattr(mod, "load_table"):
+            monkeypatch.setattr(mod, "load_table", _scrambling_load_table)
+    assert _rows(fn(spark, SF)) == baseline

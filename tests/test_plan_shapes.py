@@ -37,9 +37,7 @@ def full_plan_visibility(monkeypatch):
 
 # Queries allowed to cross the JVM↔Python boundary (vectorized by
 # design: broadcast-matmul k-NN, Arrow-batched multimodal decode, and
-# the §2.8 U-surface whose point is the crossing). l3_ann_ivf moved OUT
-# in round 2: its quantizer now trains via pyspark.ml on a sample and
-# the search itself is pure JVM (HOF dot products + cell equi-join).
+# the §2.8 U-surface whose point is the crossing).
 PYTHON_ALLOWED = {
     "q10_cosine_topk",
     "l2_embedding_neardup",  # optimization r12: q10's guarded broadcast-matmul
@@ -411,8 +409,11 @@ BOUNDED_COLLECT_SITES = {
     # corpus (llm.py docstring carries the size argument)
     ("operators/llm.py", 'pool = cand.select("id", "rel").collect()', 1),
     ("operators/llm.py", "sim_rows = sims.collect()", 1),
-    # Lloyd step: k·d centroid rows (the pyspark.ml KMeans pattern)
+    # Lloyd step: k·d centroid rows (l6_kmeans_step)
     ("operators/llm.py", "rows = dims.collect()", 1),
+    # IVF quantizer training sample: ≤ 256·n_cells unit rows by the
+    # .limit(256 * n_cells) two lines above (l3_ann_ivf)
+    ("operators/llm.py", ".collect()", 1),
     # bounded staging sample for the binaryFile demo input
     ("operators/multimodal.py", "for r in sample.collect():  # bounded staging: |docs|/50 small files", 1),
     # ONE scalar max (synthetic-key ceiling)

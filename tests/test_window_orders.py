@@ -340,7 +340,7 @@ COLLECT_ALLOWLIST = {
 # test_plan_shapes.py::test_no_direct_local_checkpoint guarantees no
 # operator can mint an uncaptured truncation outside the helpers.
 CKPT_OPAQUE_ALLOWLIST = {
-    # bounded sampled-model / pooled literal frames (collected rows →
+    # bounded pooled literal frames (collected rows →
     # createDataFrame; sizes: pool+pool² sims, k·d vocab dims).
     # l3_ann_ivf / l3_ann_recall_contract left r13: the centroid literal
     # frame became a numpy broadcast into the assignment kernel.

@@ -9,14 +9,14 @@ is the only RUNTIME (not static) determinism check; the 50-query
 DRIVER_WINDOW probe runs per-suite, this audit runs once per round and
 its N/N number is recorded in docs/ROUND{N}_NOTES.md.
 
-Known, documented exception: l3_ann_ivf — its coarse quantizer trains
-on df.sample(seed), and Bernoulli sampling CONTENT depends on partition
-layout, so its neighbor sets legitimately vary (rows-only graded; its
-layout-stable observable l3_ann_recall_contract is audited like any
-other query and must be stable).
+No query is exempt: every registered query must return the same
+multiset under the scramble. l3_ann_ivf, the former exception, picks
+and orders its quantizer's training sample by (xxhash64(vec_id, 7),
+vec_id), so its neighbor sets no longer depend on partition layout
+(tests/test_arrival_order.py::test_ann_ivf_is_arrival_order_independent).
 
 Usage: python -m tools.arrival_audit [sf_dir]   (default sf0.01)
-Exit code 0 iff every non-exempt query is stable.
+Exit code 0 iff every query is stable.
 """
 
 from __future__ import annotations
@@ -30,9 +30,8 @@ from data_wrangling_openstreetmap_spark.operators import ALL_MODULES
 from data_wrangling_openstreetmap_spark.registry import REGISTRY, _ensure_loaded
 from tests.test_arrival_order import _rows, _scrambling_load_table
 
-# layout-dependent BY DESIGN (seeded Bernoulli sample content varies
-# with partitioning); rows-only graded, recall contract audited instead
-EXPECTED_LAYOUT_DEPENDENT = {"l3_ann_ivf"}
+# queries allowed to differ under the scramble: none
+EXPECTED_LAYOUT_DEPENDENT: set[str] = set()
 
 
 def main() -> int:
