@@ -3,7 +3,8 @@
 Runs every registered query tagged as a bench headline at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
-``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+"cpus": N, "defaultParallelism": N}``
 
 Methodology mirrors BASELINE.md (warm cache, best of N): each timed run
 REBUILDS the DataFrame from the query fn and collects it — re-collecting
@@ -206,6 +207,10 @@ def main() -> None:
                 "ref_microop_s": ref_microop_s,
                 "normalized_total": normalized_total,
                 "sf": sf,
+                # the local[N] the session ran on and what Spark made of
+                # it, so a reader can check the core count was honoured
+                "cpus": int(cpus) if cpus.isdigit() else cpus,
+                "defaultParallelism": spark.sparkContext.defaultParallelism,
             }
         )
     )

@@ -28,6 +28,8 @@ def get_spark(
 
     - AQE on: runtime shuffle-partition coalescing and skew-join splits,
       so a single static ``shuffle.partitions`` works across sf0.001–0.1.
+      Streams get no AQE coalescing, so ``streaming/replay.py`` sizes
+      their state partitions when a query starts.
     - UTC session timezone: parquet timestamps here are timezone-naive;
       pinning UTC keeps Spark/DuckDB comparisons value-identical.
     - Arrow on: fast toPandas / pandas_udf transfer for the few

@@ -12,7 +12,18 @@ swapped for Kafka; every transform and watermark below is unchanged
 ST4 (watermark policy) lives here: `with_watermark` bounds state for
 append-mode aggregations; `SENTINEL_USER` events flush final windows in
 tests (a watermark only advances when new data arrives, so a replayed
-finite stream needs a late sentinel to close its last windows).
+finite stream needs a late sentinel to close its last windows). The
+sentinel chunk is projected from the events aggregate in the JVM — no
+driver round trip and no Python-RDD write task.
+
+State partitions are sized when a stream starts: streams get no AQE
+coalescing, so every stateful operator splits its state into exactly
+``spark.sql.shuffle.partitions`` pieces for the life of the query, and
+each piece costs a state-store open and commit per micro-batch whether
+or not it holds data. ``run_to_memory`` starts its query with
+``min(shuffle.partitions, defaultParallelism)`` state partitions and
+restores the session conf right after ``start()``; the query's cloned
+session keeps the smaller value.
 """
 
 from __future__ import annotations
@@ -22,6 +33,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..io import load_table
 
@@ -30,6 +42,7 @@ EVENTS_SCHEMA = (
     "event_type string, value double, props string"
 )
 SENTINEL_USER = -1
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def write_ordered_chunks(dfs, out_dir: str) -> None:
@@ -80,15 +93,23 @@ def stage_replay_dir(
         ranked.filter(F.col("chunk") == c).drop("chunk") for c in range(n_chunks)
     ]
     if sentinel_hours is not None:
-        max_ts = events.agg(F.max("ts")).collect()[0][0]
-        chunks.append(
-            spark.createDataFrame(
-                [(-(10**9), max_ts, SENTINEL_USER, "sentinel", 0.0, "{}")],
-                EVENTS_SCHEMA,
-            ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {sentinel_hours} HOURS"))
-        )
+        chunks.append(_sentinel_chunk(events, "ts", sentinel_hours))
     write_ordered_chunks(chunks, out_dir)
     return out_dir
+
+
+def _sentinel_chunk(frame: DataFrame, ts_col: str, hours: int) -> DataFrame:
+    """The one-row sentinel chunk: an event ``hours`` after
+    ``max(ts_col)`` of ``frame``, projected to ``EVENTS_SCHEMA`` from
+    the aggregate itself, so the write is one JVM job."""
+    return frame.agg(F.max(ts_col).alias("ts")).select(
+        F.lit(-(10**9)).cast("bigint").alias("event_id"),
+        (F.col("ts") + F.expr(f"INTERVAL {hours} HOURS")).alias("ts"),
+        F.lit(SENTINEL_USER).cast("bigint").alias("user_id"),
+        F.lit("sentinel").alias("event_type"),
+        F.lit(0.0).alias("value"),
+        F.lit("{}").alias("props"),
+    )
 
 
 def _time_order():
@@ -111,11 +132,22 @@ def run_to_memory(
     sink_name: str,
     output_mode: str,
     watermark: str | None = None,
-) -> None:
+) -> StreamingQuery:
     """Apply a shared transform to the stream, drain it into an
     in-memory sink table, and block until every staged file is
-    processed. Returns after the query stops; read results from
-    ``spark.table(sink_name)``."""
+    processed. Returns the terminated query; read results from
+    ``spark.table(sink_name)``.
+
+    The query starts with ``min(spark.sql.shuffle.partitions,
+    defaultParallelism)`` state partitions. Streams get no AQE
+    coalescing, so a static conf sized for batch (32 here) would
+    become 32 state-store tasks per stateful operator per micro-batch
+    however little data they hold. The conf is set on the stream's
+    session only around ``start()``, which clones the session: the
+    running query keeps the smaller value and the caller's conf reads
+    the same afterwards, also when ``start()`` raises. Changing the
+    same session's conf from another thread meanwhile is unsupported.
+    """
     src = stream_df
     if watermark is not None:
         # EventTimeWatermark requires TIMESTAMP (not NTZ). Session TZ is
@@ -124,15 +156,23 @@ def run_to_memory(
         src = src.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
             "ts", watermark
         )
-    q = (
+    writer = (
         transform(src)
         .writeStream.format("memory")
         .queryName(sink_name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
-        .start()
     )
+    spark = stream_df.sparkSession
+    caller = spark.conf.get(_SHUFFLE_PARTITIONS)
+    state = min(int(caller), spark.sparkContext.defaultParallelism)
+    spark.conf.set(_SHUFFLE_PARTITIONS, str(state))
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set(_SHUFFLE_PARTITIONS, caller)
     q.awaitTermination()
+    return q
 
 
 def stage_jittered_replay_dir(
@@ -170,14 +210,6 @@ def stage_jittered_replay_dir(
         for c in range(n_chunks)
     ]
     if sentinel_hours is not None:
-        max_ts = staged.agg(F.max("_arrival")).collect()[0][0]
-        chunks.append(
-            spark.createDataFrame(
-                [(-(10**9), max_ts, SENTINEL_USER, "sentinel", 0.0, "{}")],
-                EVENTS_SCHEMA,
-            ).withColumn(
-                "ts", F.col("ts") + F.expr(f"INTERVAL {sentinel_hours} HOURS")
-            )
-        )
+        chunks.append(_sentinel_chunk(staged, "_arrival", sentinel_hours))
     write_ordered_chunks(chunks, out_dir)
     return out_dir

@@ -402,9 +402,6 @@ BOUNDED_COLLECT_SITES = {
     ("plans/window_orders.py", "bad = grouped.filter(cond).limit(3).collect()", 1),
     # carry-desync probe: ONE row (count aggregates per argument pair)
     ("plans/window_orders.py", "row = child_df.agg(*aggs).collect()[0]", 1),
-    # streaming replay: ONE scalar max per call (watermark anchor)
-    ("streaming/replay.py", 'max_ts = events.agg(F.max("ts")).collect()[0][0]', 1),
-    ("streaming/replay.py", 'max_ts = staged.agg(F.max("_arrival")).collect()[0][0]', 1),
     # MMR rerank: pool + pool² rows, quadratic in the POOL never the
     # corpus (llm.py docstring carries the size argument)
     ("operators/llm.py", 'pool = cand.select("id", "rel").collect()', 1),

@@ -855,3 +855,112 @@ def test_stream_sliding_extrema_converges_under_jittered_arrival(
     want = TR.sliding_extrema(events)
     assert _rows(got) == _rows(want)
     assert got.count() > 0
+
+
+# -- state partitions sized at start, sentinel projected in the JVM ---------
+# The suite session runs local[8] with 8 shuffle partitions, where
+# min(partitions, defaultParallelism) is the conf itself; these tests
+# raise the conf to 32 so the sizing path is actually taken.
+
+_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture
+def partitions_32(spark):
+    before = spark.conf.get(_PARTITIONS)
+    spark.conf.set(_PARTITIONS, "32")
+    try:
+        yield
+    finally:
+        spark.conf.set(_PARTITIONS, before)
+
+
+def test_run_to_memory_sizes_state_partitions_to_parallelism(
+    spark, replay_dir, partitions_32
+):
+    q = run_to_memory(
+        read_event_stream(spark, replay_dir),
+        TR.tumbling_counts,
+        "sink_tumbling_sized",
+        output_mode="append",
+        watermark="1 hour",
+    )
+    want_parts = min(32, spark.sparkContext.defaultParallelism)
+    ops = [op for p in q.recentProgress for op in p.stateOperators]
+    assert ops, "no state operator reported progress"
+    assert {op.numShufflePartitions for op in ops} == {want_parts}
+    assert spark.conf.get(_PARTITIONS) == "32"
+    got = (
+        spark.table("sink_tumbling_sized")
+        .filter(F.col("event_type") != "sentinel")
+        .withColumn("window_start", F.col("window_start").cast("timestamp_ntz"))
+        .withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
+    )
+    want = TR.tumbling_counts(load_table(spark, SF, "events"))
+    assert _rows(got) == _rows(want)
+    assert got.count() > 0
+
+
+def test_run_to_memory_restores_conf_when_start_raises(
+    spark, replay_dir, partitions_32
+):
+    """Append mode on a watermark-less aggregation is rejected inside
+    ``start()``; the caller's conf must still read its own value."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException):
+        run_to_memory(
+            read_event_stream(spark, replay_dir),
+            TR.tumbling_counts,
+            "sink_tumbling_rejected",
+            output_mode="append",
+        )
+    assert spark.conf.get(_PARTITIONS) == "32"
+
+
+def _max_arrival(events, jitter_secs):
+    # the same transit delay stage_jittered_replay_dir chunks by,
+    # recomputed in Python
+    return max(
+        r.ts + dt.timedelta(seconds=(r.event_id * 2654435761) % jitter_secs)
+        for r in events.select("event_id", "ts").collect()
+    )
+
+
+@pytest.mark.parametrize("stage", ["ordered", "jittered"])
+def test_staged_sentinel_row(spark, tmp_path, stage):
+    import os
+
+    events = load_table(spark, SF, "events")
+    out = str(tmp_path / stage)
+    if stage == "ordered":
+        stage_replay_dir(spark, SF, out, n_chunks=2, sentinel_hours=48)
+        max_ts = events.agg(F.max("ts")).collect()[0][0]
+    else:
+        stage_jittered_replay_dir(
+            spark, SF, out, n_chunks=2, jitter_secs=900, sentinel_hours=48
+        )
+        max_ts = _max_arrival(events, 900)
+    files = sorted(
+        (e.stat().st_mtime, e.path)
+        for e in os.scandir(out)
+        if e.name.endswith(".parquet")
+    )
+    assert len(files) == 3
+    mtimes = [m for m, _ in files]
+    assert mtimes == sorted(set(mtimes)), "chunk mtimes not strictly increasing"
+    sentinel = spark.read.parquet(files[-1][1])
+    want_types = [
+        tuple(f.split()) for f in EVENTS_SCHEMA.split(", ")
+    ]
+    assert sentinel.dtypes == want_types
+    assert [tuple(r) for r in sentinel.collect()] == [
+        (
+            -(10**9),
+            max_ts + dt.timedelta(hours=48),
+            SENTINEL_USER,
+            "sentinel",
+            0.0,
+            "{}",
+        )
+    ]

@@ -45,80 +45,6 @@ SWEEP_SF = os.environ.get("DWOS_WINDOW_SWEEP_SF", "/root/testdata/sf0.1")
 SKIP = {"osm_wrangle_demo"}
 
 
-class _DiskProbeCache:
-    """Cross-run persistence for the checkers' probe cache (VERDICT r10
-    §Next 5: the suite-time lever after the round-10 construction memo).
-
-    The four checkers key every fixture probe by the window child's
-    ``semanticHash`` plus the spec SQL — the probe result (a tie-class
-    value-identity verdict against the read-only sf0.1 fixture) is a
-    pure function of (canonicalized plan, fixture), so an entry stays
-    valid exactly as long as both are unchanged: edit an operator and
-    its plan hashes differ (fresh probe); the fixture is fingerprinted
-    below and a mismatch drops the whole file. Queries whose plans
-    embed per-run temp paths (sink relays) or RDD ids (checkpoint
-    leaves) simply miss and re-probe — correctness never leans on the
-    cache, only cold-start time does. Set DWOS_NO_SWEEP_CACHE=1 to
-    force a fully cold sweep (the per-round closing ledger does).
-    """
-
-    def __init__(self, path: str, fingerprint: str):
-        import json
-
-        self._path = path
-        self._fingerprint = fingerprint
-        self._fresh: dict = {}
-        self._stored: dict = {}
-        if os.environ.get("DWOS_NO_SWEEP_CACHE") == "1":
-            return
-        try:
-            with open(path, encoding="utf-8") as fh:
-                blob = json.load(fh)
-            if blob.get("fingerprint") == fingerprint:
-                self._stored = blob["entries"]
-        except (OSError, ValueError, KeyError):
-            self._stored = {}
-
-    def __contains__(self, key) -> bool:
-        return repr(key) in self._stored or repr(key) in self._fresh
-
-    def __getitem__(self, key):
-        k = repr(key)
-        return self._fresh[k] if k in self._fresh else self._stored[k]
-
-    def __setitem__(self, key, value) -> None:
-        self._fresh[repr(key)] = value
-
-    def save(self) -> None:
-        import json
-
-        if os.environ.get("DWOS_NO_SWEEP_CACHE") == "1":
-            return
-        # never persist env-specific probe skips — a transient executor
-        # hiccup must not become a frozen blind spot across runs
-        fresh = {
-            k: v
-            for k, v in self._fresh.items()
-            if not (isinstance(v, str) and v.startswith("__skipped__"))
-        }
-        merged = {**self._stored, **fresh}
-        blob = {"fingerprint": self._fingerprint, "entries": merged}
-        tmp = self._path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(blob, fh, indent=0, sort_keys=True)
-        os.replace(tmp, self._path)
-
-
-def _fixture_fingerprint(sf_dir: str) -> str:
-    import hashlib
-
-    h = hashlib.sha256()
-    for name in sorted(os.listdir(sf_dir)):
-        st = os.stat(os.path.join(sf_dir, name))
-        h.update(f"{name}:{st.st_size}:{int(st.st_mtime)};".encode())
-    return h.hexdigest()
-
-
 def _w36_prefix_vwap(spark, order_cols) -> DataFrame:
     """w36's shape with a parameterized ORDER BY — ``order_cols``
     without the value columns reproduces the pre-fix hazard."""
@@ -394,10 +320,9 @@ def test_registry_order_determinism(spark, monkeypatch):
 
     monkeypatch.setenv("DWOS_FULL_PLAN", "1")
     _ensure_loaded()
-    cache = _DiskProbeCache(
-        os.path.join(os.path.dirname(__file__), "order_sweep_cache.json"),
-        _fixture_fingerprint(SWEEP_SF),
-    )
+    # in-run probe cache shared by the checkers: identical (child, spec)
+    # probes run once per sweep, and every probe runs in every session
+    cache: dict = {}
     wstats = SweepStats()
     lstats = SweepStats()
     astats = SweepStats()
@@ -462,10 +387,6 @@ def test_registry_order_determinism(spark, monkeypatch):
             # any other query plan (its own leaf is the PREVIOUS
             # round's checkpoint, whose pre-plan was captured earlier)
             check(name, pre)
-    # persist probe results keyed by (semanticHash, spec) for the next
-    # run — saved BEFORE the asserts so a red sweep still reuses its
-    # green probes on the fix-verify rerun
-    cache.save()
     assert not failures, "\n".join(failures)
     unexplained = set(opaque) - CKPT_OPAQUE_ALLOWLIST
     assert not unexplained, (
