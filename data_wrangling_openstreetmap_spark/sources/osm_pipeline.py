@@ -13,20 +13,29 @@ lifecycle re-expressed declaratively:
 - P3  audit: regex triage of tag keys (lower / lower_colon /
   problemchars / other) as one `when` chain — a single projection.
 - P4/P5 clean: street-type extraction (`regexp_extract` of the last
-  word) + broadcast-join against the normalization mapping +
-  `coalesce(mapped, original)`; postcode digits via regex.
+  word) looked up in the normalization mapping as a map literal;
+  postcode digits via regex.
 - U5  shape: nested documents as native structs/arrays/maps.
 - flatten: `posexplode` junction tables — the reference's SQLite star
   (nodes, nodes_tags, ways, ways_tags, ways_nodes).
 - S4/S5 sinks: header CSV per flat table, line-delimited JSON docs.
 
 Everything is built-in Column expressions; zero Python UDFs.
+
+`run_pipeline` parses the extract once per row tag, as the reference's
+single iterparse pass does: the node and way scans are persisted, and
+the six sink writes and the two audit aggregations then run as
+concurrent Spark jobs over those two cached scans. The audits come
+back as small local frames.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor, wait
 
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -139,26 +148,17 @@ def audit_street_types(tags: DataFrame) -> DataFrame:
     )
 
 
-def mapping_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(STREET_MAPPING.items()), "messy string, clean string"
-    )
-
-
-def clean_streets(spark: SparkSession, tags: DataFrame) -> DataFrame:
-    """Normalize street values: broadcast-join the last word against the
-    mapping and rebuild the value with the canonical type — the
-    reference's `update_name(name, mapping)` as a joined projection.
+def clean_streets(tags: DataFrame) -> DataFrame:
+    """Normalize street values: look the last word up in the mapping and
+    rebuild the value with the canonical type — the reference's
+    `update_name(name, mapping)` as one projection. The mapping is a
+    map literal, so the plan has no join and no Python-side relation.
     Non-street tags pass through untouched."""
     is_street = (F.col("type") == "addr") & (F.col("key") == "street")
-    typed = tags.withColumn(
-        "street_type",
-        F.when(is_street, F.regexp_extract(F.col("value"), r"([^\t\n\f\r ]+\.?)\z", 1)),
-    )
-    mapped = typed.join(
-        F.broadcast(mapping_df(spark)),
-        typed.street_type == F.col("messy"),
-        "left",
+    street_type = F.regexp_extract(F.col("value"), r"([^\t\n\f\r ]+\.?)\z", 1)
+    mapping = F.create_map(*(F.lit(w) for pair in STREET_MAPPING.items() for w in pair))
+    typed = tags.withColumn("street_type", F.when(is_street, street_type)).withColumn(
+        "clean", F.element_at(mapping, F.col("street_type"))
     )
     cleaned_value = F.when(
         is_street & F.col("clean").isNotNull(),
@@ -167,7 +167,7 @@ def clean_streets(spark: SparkSession, tags: DataFrame) -> DataFrame:
             F.col("clean"),
         ),
     ).otherwise(F.col("value"))
-    return mapped.select(
+    return typed.select(
         "id", "type", "key", cleaned_value.alias("value"), "raw_key"
     )
 
@@ -259,13 +259,19 @@ def flatten(nodes: DataFrame, ways: DataFrame, clean_node_tags: DataFrame):
     }
 
 
-def write_sinks(tables: dict[str, DataFrame], docs: DataFrame, out_dir: str) -> None:
-    """S4 CSV (flat star) + S5 line-delimited JSON (nested docs)."""
-    for name, df in tables.items():
-        df.write.mode("overwrite").option("header", True).csv(
-            os.path.join(out_dir, f"csv/{name}")
+def _sink_writes(
+    tables: dict[str, DataFrame], docs: DataFrame, out_dir: str
+) -> list[Callable[[], None]]:
+    """S4 CSV (flat star) + S5 line-delimited JSON (nested docs), one
+    callable per sink, each running one write job."""
+    def csv(name: str, df: DataFrame) -> Callable[[], None]:
+        return lambda: df.write.mode("overwrite").option("header", True).csv(
+            os.path.join(out_dir, "csv", name)
         )
-    docs.write.mode("overwrite").json(os.path.join(out_dir, "json/documents"))
+
+    return [csv(name, df) for name, df in tables.items()] + [
+        lambda: docs.write.mode("overwrite").json(os.path.join(out_dir, "json/documents"))
+    ]
 
 
 def top_contributors(tables: dict[str, DataFrame], k: int = 10) -> DataFrame:
@@ -291,19 +297,53 @@ def top_amenities(tables: dict[str, DataFrame], k: int = 10) -> DataFrame:
     )
 
 
-def run_pipeline(spark: SparkSession, osm_path: str, out_dir: str | None = None):
-    """Full wrangle: ingest → audit → clean → shape → flatten (→ sinks).
-    Returns (tables, docs, audits) for inspection/tests."""
+def run_pipeline(spark: SparkSession, osm_path: str, out_dir: str):
+    """Full wrangle: ingest → audit → clean → shape → flatten → sinks
+    under `out_dir`. Returns (tables, docs, audits).
+
+    The XML is parsed once per row tag: the node and way scans are
+    persisted (MEMORY_AND_DISK) and filled by two concurrent jobs, then
+    the six sink writes and the two audit aggregations run as
+    concurrent jobs over them, at most `defaultParallelism` at a time.
+    Each job runs in the caller's job group. Both scans are unpersisted
+    before this returns or raises; when an output fails, the others
+    still finish and the first failure is raised.
+
+    `tables` and `docs` are lazy frames over the raw XML. The two
+    `audits` frames are materialized: each is collected once over the
+    cached scans and returned as a local relation, so reading it fires
+    no Spark job and does not parse the XML again."""
     nodes = read_nodes(spark, osm_path)
     ways = read_ways(spark, osm_path)
     raw_tags = explode_tags(nodes)
+    cleaned = clean_postcodes(clean_streets(raw_tags))
+    tables = flatten(nodes, ways, cleaned)
+    docs = shape_documents(nodes, cleaned)
     audits = {
         "tag_keys": audit_tag_keys(raw_tags),
         "street_types": audit_street_types(raw_tags),
     }
-    cleaned = clean_postcodes(clean_streets(spark, raw_tags))
-    tables = flatten(nodes, ways, cleaned)
-    docs = shape_documents(nodes, cleaned)
-    if out_dir is not None:
-        write_sinks(tables, docs, out_dir)
-    return tables, docs, audits
+    scans = (nodes, ways)
+    for scan in scans:
+        scan.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
+            _run_concurrently(spark, pool, [scan.count for scan in scans])
+            outputs = [df.toArrow for df in audits.values()] + _sink_writes(tables, docs, out_dir)
+            arrow = _run_concurrently(spark, pool, outputs)[: len(audits)]
+    finally:
+        for scan in scans:
+            scan.unpersist()
+    return tables, docs, {name: spark.createDataFrame(tbl) for name, tbl in zip(audits, arrow)}
+
+
+def _run_concurrently(
+    spark: SparkSession, pool: ThreadPoolExecutor, calls: list[Callable]
+) -> list:
+    """Run `calls` on `pool` and return their results in order. Each call
+    inherits the caller's local properties (job group, description,
+    scheduler pool), so its jobs are attributed like the caller's own.
+    Waits for every call before raising the first failure."""
+    futures = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
+    wait(futures)
+    return [f.result() for f in futures]

@@ -81,9 +81,11 @@ def stage_replay_dir(
 
     Files are written one at a time in time order: the file source
     picks them up in discovery order, so replay preserves event-time
-    order across micro-batches.
+    order across micro-batches. Within a chunk, rows keep the
+    `(ts, event_id)` order of the window that numbers them; no separate
+    sort runs.
     """
-    events = load_table(spark, sf_dir, "events").orderBy("ts", "event_id")
+    events = load_table(spark, sf_dir, "events")
     rows = events.count()
     per = (rows + n_chunks - 1) // n_chunks
     ranked = events.withColumn(

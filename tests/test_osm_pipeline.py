@@ -5,6 +5,7 @@ lifecycle, asserted stage by stage."""
 from __future__ import annotations
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from data_wrangling_openstreetmap_spark.sources.osm_gen import generate_osm_xml
@@ -100,3 +101,143 @@ def test_query_layer(wrangled):
     assert top[0].n_contributions >= top[-1].n_contributions
     amen = P.top_amenities(tables).collect()
     assert {r.value for r in amen} <= {"cafe", "restaurant", "school", "library", "pharmacy"}
+
+
+# -- run_pipeline fan-out: one parse per row tag, concurrent outputs --------
+
+_EMPTY_TAGS_XML = """<?xml version="1.0" encoding="UTF-8"?>
+<osm version="0.6">
+<node id="1" lat="43.1" lon="-79.1" user="a" uid="1" version="1" changeset="1" timestamp="2024-01-01T00:00:00Z"/>
+<node id="2" lat="43.2" lon="-79.2" user="b" uid="2" version="1" changeset="1" timestamp="2024-01-02T00:00:00Z"/>
+<way id="10" user="a" uid="1" version="1" changeset="1" timestamp="2024-02-01T00:00:00Z">
+  <nd ref="1"/>
+  <nd ref="2"/>
+</way>
+</osm>
+"""
+
+
+def _persisted(sc) -> set[int]:
+    return set(sc._jsc.getPersistentRDDs().keySet())
+
+
+def _last_job_id(sc) -> int:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def _jobs_since(spark, last_job: int) -> list:
+    """Status-store job data of every job submitted after ``last_job``,
+    leaving out those of streaming queries still running in the session
+    (their job group is the query's run id)."""
+    sc = spark.sparkContext
+    streams = {str(q.runId) for q in spark.streams.active}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return [
+        j
+        for j in (jobs.apply(i) for i in range(jobs.size()))
+        if j.jobId() > last_job
+        and not (j.jobGroup().isDefined() and j.jobGroup().get() in streams)
+    ]
+
+
+def _in_group(spark, group: str, fn):
+    """Run ``fn()`` with the caller's job group set to ``group``; return
+    its result and the status-store data of the jobs it fired."""
+    sc = spark.sparkContext
+    last = _last_job_id(sc)
+    sc.setJobGroup(group, "osm pipeline test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, _jobs_since(spark, last)
+
+
+@pytest.fixture(scope="module")
+def extract(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("osm_fanout")
+    return d, generate_osm_xml(spark, SF, str(d), max_nodes=150)
+
+
+def test_pipeline_parses_each_row_tag_once(spark, extract):
+    import os
+
+    d, path = extract
+    _, jobs = _in_group(
+        spark, "osm-fanout", lambda: P.run_pipeline(spark, path, str(d / "once"))
+    )
+    assert jobs
+    # every job, including those submitted from the worker threads,
+    # carries the caller's job group
+    groups = {j.jobGroup().get() if j.jobGroup().isDefined() else None for j in jobs}
+    assert groups == {"osm-fanout"}
+    store = spark.sparkContext._jsc.sc().statusStore()
+    size = os.path.getsize(path)
+    scans = set()
+    for j in jobs:
+        sids = j.stageIds()
+        for i in range(sids.size()):
+            sd = store.lastStageAttempt(sids.apply(i))
+            if sd.status().toString() == "COMPLETE" and sd.inputBytes() == size:
+                scans.add(sd.stageId())
+    assert 1 <= len(scans) <= 2
+
+
+def test_pipeline_leaves_nothing_persisted(spark, extract):
+    d, path = extract
+    sc = spark.sparkContext
+    before = _persisted(sc)
+    tables, docs, _ = P.run_pipeline(spark, path, str(d / "released"))
+    assert _persisted(sc) == before
+    # the returned frames read the raw XML: running them caches nothing
+    assert tables["nodes"].count() == 150
+    assert docs.count() == 150
+    assert _persisted(sc) == before
+
+
+def test_pipeline_failed_write_raises_after_other_outputs(spark, extract):
+    d, path = extract
+    sc = spark.sparkContext
+    out = d / "blocked"
+    out.mkdir()
+    (out / "csv").write_text("a file where the csv/ directory must go\n")
+    before = _persisted(sc)
+    with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+        P.run_pipeline(spark, path, str(out))
+    assert _persisted(sc) == before
+    assert (out / "json" / "documents" / "_SUCCESS").exists()
+
+
+def test_audits_are_local_and_match_raw_aggregations(spark, extract):
+    d, path = extract
+    _, _, audits = P.run_pipeline(spark, path, str(d / "audits"))
+    got, jobs = _in_group(
+        spark, "osm-audits", lambda: {k: [tuple(r) for r in df.collect()] for k, df in audits.items()}
+    )
+    assert jobs == []
+    raw_tags = P.explode_tags(P.read_nodes(spark, path))
+    want = {
+        "tag_keys": P.audit_tag_keys(raw_tags),
+        "street_types": P.audit_street_types(raw_tags),
+    }
+    assert sorted(got["tag_keys"]) == sorted(tuple(r) for r in want["tag_keys"].collect())
+    assert got["street_types"] == [tuple(r) for r in want["street_types"].collect()]
+    for k, df in audits.items():
+        assert df.schema == want[k].schema
+
+
+def test_audits_of_tagless_extract_are_typed_and_empty(spark, tmp_path):
+    path = tmp_path / "tagless.osm"
+    path.write_text(_EMPTY_TAGS_XML)
+    tables, _, audits = P.run_pipeline(spark, str(path), str(tmp_path / "out"))
+    assert tables["nodes"].count() == 2
+    assert tables["ways_nodes"].count() == 2
+    raw_tags = P.explode_tags(P.read_nodes(spark, str(path)))
+    assert audits["tag_keys"].schema == P.audit_tag_keys(raw_tags).schema
+    assert audits["street_types"].schema == P.audit_street_types(raw_tags).schema
+    assert audits["tag_keys"].collect() == []
+    assert audits["street_types"].collect() == []

@@ -411,12 +411,24 @@ BOUNDED_COLLECT_SITES = {
     # IVF quantizer training sample: ≤ 256·n_cells unit rows by the
     # .limit(256 * n_cells) two lines above (l3_ann_ivf)
     ("operators/llm.py", ".collect()", 1),
+    # q10 broadcast-matmul index: cap+1 rows by the limit on the same
+    # line; the docstring line above it states that bound
+    ("operators/llm.py", "tbl = e.limit(cap_rows + 1).toArrow()", 1),
+    ("operators/llm.py", "Guard and collect are ONE bounded job: ``limit(cap+1).toArrow()``", 1),
     # bounded staging sample for the binaryFile demo input
     ("operators/multimodal.py", "for r in sample.collect():  # bounded staging: |docs|/50 small files", 1),
     # ONE scalar max (synthetic-key ceiling)
     ("operators/composites.py", 'max_key = cust.agg(F.max("c_custkey")).collect()[0][0]', 1),
     # OSM demo XML generator: .limit(max_nodes) two lines above
     ("sources/osm_gen.py", ".collect()", 1),
+    # OSM audits, collected once each: tag_keys has at most 4 rows (one
+    # per bucket of the when-chain); street_types has one row per
+    # distinct street-type word — the reference's audit dict
+    (
+        "sources/osm_pipeline.py",
+        "outputs = [df.toArrow for df in audits.values()] + _sink_writes(tables, docs, out_dir)",
+        1,
+    ),
     # dense-regime vocabulary probe: cap+1 rows by the limit() in
     # `probe` (functions/text.py::dense_token_masks — optimization r12)
     (
@@ -428,7 +440,9 @@ BOUNDED_COLLECT_SITES = {
 # (.first()/.head(n)/.take(n) are bounded by construction — ≤ n rows —
 # so they are not scanned; a16's freqItems .first() is the one site.)
 
-_DRIVER_MATERIALIZERS = (".collect()", ".toPandas()", "collectAsList", "toLocalIterator")
+# ".toArrow" without parentheses: a bound ``df.toArrow`` handed to a
+# thread pool materializes on the driver as surely as a call does.
+_DRIVER_MATERIALIZERS = (".collect()", ".toPandas()", ".toArrow", "collectAsList", "toLocalIterator")
 
 
 def test_bounded_collect_allowlist():

@@ -964,3 +964,45 @@ def test_staged_sentinel_row(spark, tmp_path, stage):
             "{}",
         )
     ]
+
+
+def test_staged_chunks_keep_time_order_without_a_range_sort(
+    spark, tmp_path, monkeypatch
+):
+    """Chunk files hold the time-ordered split of the events, each in
+    ``(ts, event_id)`` order, and a chunk's plan orders rows only by the
+    numbering window: no range-partitioned sort runs before it."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from data_wrangling_openstreetmap_spark.plans.asserts import plan_string
+    from data_wrangling_openstreetmap_spark.streaming import replay
+
+    staged = []
+
+    def capture(dfs, out_dir):
+        staged.extend(dfs)
+        write_ordered_chunks(staged, out_dir)
+
+    monkeypatch.setattr(replay, "write_ordered_chunks", capture)
+    out = str(tmp_path / "chunks")
+    stage_replay_dir(spark, SF, out, n_chunks=4)
+    assert len(staged) == 4
+    plan = plan_string(staged[0], mode="simple").lower()
+    assert "singlepartition" in plan
+    assert "rangepartitioning" not in plan
+
+    events = sorted(
+        (r.ts, r.event_id)
+        for r in load_table(spark, SF, "events").select("ts", "event_id").collect()
+    )
+    per = (len(events) + 3) // 4
+    files = sorted(
+        (e.stat().st_mtime, e.path) for e in os.scandir(out) if e.name.endswith(".parquet")
+    )
+    got = [
+        list(zip(*pq.read_table(f, columns=["ts", "event_id"]).to_pydict().values()))
+        for _, f in files
+    ]
+    assert got == [events[c * per : (c + 1) * per] for c in range(4)]
