@@ -208,65 +208,58 @@ def lang_id(text: Column) -> Column:
 # document's token set folds into one BIGINT and |A∩B| is a single
 # AND+POPCOUNT — the same n²/2 pairs evaluate as a broadcast pair scan
 # of narrow mask rows with no explode, no duplication and no pair-count
-# shuffle. The regime is picked ONCE, in token_set_pairs, by two
-# probes: an HLL sketch of the vocabulary size, then (only when the
-# sketch is near the cap) a capped distinct (limit cap+1).
+# shuffle. The regime is picked ONCE, in token_set_pairs, by ONE probe:
+# a capped distinct (limit cap+1) whose ≤ cap rows are the exact
+# vocabulary and whose cap+1st row means sparse.
 DENSE_VOCAB_CAP = 64
 
 
 def dense_token_masks(df, id_col: str, text_col: str = "text"):
-    """(id, __mask, __n) per document when the global distinct-token
+    """(id, __mask, __n) per row when the global distinct-token
     vocabulary of ``df[text_col]`` fits ``DENSE_VOCAB_CAP`` bits, else
     ``None`` (token_set_pairs then takes the inverted-index plan).
 
-    ``__mask`` ORs ``1 << pos(token)`` over the document's tokens
-    (duplicate tokens vanish in the OR — no pre-distinct pass);
-    ``__n`` = bit_count(__mask) = |distinct tokens|. Documents with
-    zero tokens produce no mask row, mirroring what ``explode`` does
-    in the sparse plan. Bit positions come from the sorted global
-    vocabulary, so masks are deterministic; all downstream quantities
-    (popcounts) are permutation-invariant anyway.
+    ``__mask`` ORs ``1 << pos(token)`` over the row's tokens in one
+    per-row ``aggregate``; ``__n`` = bit_count(__mask) = |distinct
+    tokens|. Rows with no tokens (empty or NULL text) give no mask row,
+    as ``explode`` gives none in the sparse plan. Masks are per ROW, so
+    rows sharing an id keep their own token sets, as in the sparse
+    plan (a groupBy(id) bit_or used to OR them, and the regimes
+    disagreed). Bits follow the sorted vocabulary; bit 63 is the BIGINT
+    sign bit, which AND and bit_count treat like any other.
 
-    Scale (reworked r13 per VERDICT r12 §Next #7): the regime test is a
-    SKETCH first — one approx_count_distinct aggregate whose exchange
-    carries a single HLL sketch per partition, never the per-partition
-    distinct token sets — so a real open-vocabulary corpus answers
-    "sparse" without ever paying a distinct shuffle (Spark cannot
-    early-terminate a distinct aggregate, VERDICT r12 §What's-wrong
-    #2). The regime choice is performance-only — both branches compute
-    identical results (regime equivalence test per caller,
-    tests/test_round12_opt.py) — so the sketch's ±3·rsd error needs
-    only a safety factor, not exactness: estimates above 4× the cap
-    are sparse outright; the exact bit-position vocab
-    (which needs the true sorted token set) is probed only below that,
-    where the distinct's exchange is provably tiny. The mask frame is
-    then ckpt-materialized ONCE: mask_pair_scan aliases it twice (scan
-    + broadcast sides), which previously re-ran the whole token-explode
-    + bit_or aggregation per side (ADVICE r12 #3) — 16 bytes/doc, the
-    always-safe ckpt tier.
+    Scale: ONE probe action, and the driver receives ≤ cap+1 rows. The
+    distinct's exchange carries each partition's distinct tokens —
+    never more than the token rows the sparse self-join then shuffles —
+    so the probe never costs more than the plan it picks; the r13
+    HLL-sketch pre-probe only added a scan to every dense build. The
+    masks are one narrow projection of the scan (no explode, no
+    groupBy, no exchange), so mask_pair_scan's two sides each re-derive
+    them; the old ckpt existed only because both sides re-ran an
+    explode + bit_or aggregate (ADVICE r12 #3).
     """
     toks = distinct_tokens(F.col(text_col))
-    tok_rows = df.select(F.explode(toks).alias("__tok"))
-    est = tok_rows.agg(F.approx_count_distinct("__tok").alias("e")).first()[0]
-    if est > 4 * DENSE_VOCAB_CAP:
-        return None
-    probe = tok_rows.distinct().limit(DENSE_VOCAB_CAP + 1)
+    probe = df.select(F.explode(toks)).distinct().limit(DENSE_VOCAB_CAP + 1)
     vocab = sorted(r[0] for r in probe.collect())  # bounded: limit(cap+1) above
     if len(vocab) > DENSE_VOCAB_CAP:
         return None
     pos_map = F.create_map(
         *[c for i, t in enumerate(vocab) for c in (F.lit(t), F.lit(i))]
     )
-    masks = (
-        df.select(F.col(id_col), F.explode(toks).alias("__tok"))
-        .select(id_col, F.element_at(pos_map, F.col("__tok")).alias("__pos"))
-        .groupBy(id_col)
-        .agg(F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), __pos)")).alias("__mask"))
+    # F.shiftleft takes only a Python int shift; the per-token shift
+    # is a Column, so the SQL function is called by name
+    mask = F.aggregate(
+        toks,
+        F.lit(0).cast("bigint"),
+        lambda acc, t: acc.bitwiseOR(
+            F.call_function("shiftleft", F.lit(1).cast("bigint"), F.element_at(pos_map, t))
+        ),
+    )
+    return (
+        df.where(F.size(toks) > 0)
+        .select(F.col(id_col), mask.alias("__mask"))
         .select(id_col, "__mask", F.bit_count("__mask").alias("__n"))
     )
-    from ..operators._helpers import ckpt  # lazy: operators imports us
-
-    return ckpt(masks)
 
 
 def mask_pair_scan(masks, id_col: str, spark):
@@ -274,11 +267,12 @@ def mask_pair_scan(masks, id_col: str, spark):
     a.id < b.id, as a deliberate BroadcastNestedLoopJoin — the stream
     side is round-robin repartitioned to the session's default
     parallelism so the n²/2 popcount evaluations spread across cores
-    instead of landing on the one AQE-coalesced post-aggregate
-    partition. Returns the joined frame with both sides aliased a/b;
-    token_set_pairs projects it to the pair contract.
+    instead of landing on the scan's one task per row group. Each side
+    re-derives the masks from the scan; nothing runs eagerly. Returns
+    the joined frame with both sides aliased a/b; token_set_pairs
+    projects it to the pair contract.
 
-    Scale: right while DISTINCT DOCUMENTS fit a broadcast (~10⁷ rows of
+    Scale: right while the mask rows fit a broadcast (~10⁷ rows of
     16 B); past that, block the pair grid (QB×IB on id hash —
     l3_knn_block_matmul's shape). With a dense tiny vocabulary that
     O(n²) is unavoidable in ANY plan — every pair collides in some
@@ -299,9 +293,9 @@ def token_set_pairs(df, id_col: str, text_col: str, spark):
 
     The regime is decided here, once per call (see DENSE_VOCAB_CAP):
 
-    DENSE (vocabulary ≤ 64): the ckpt'd mask frame of
-    dense_token_masks through mask_pair_scan's broadcast pair scan,
-    ``common = bit_count(a & b)``; ``common > 0`` drops the disjoint
+    DENSE (vocabulary ≤ 64 by one capped-distinct probe): the per-row
+    masks of dense_token_masks through mask_pair_scan's broadcast pair
+    scan, ``common = bit_count(a & b)``; ``common > 0`` drops the disjoint
     pairs the scan also visits, so both regimes return the same set.
 
     SPARSE: the inverted-index join — explode distinct tokens,

@@ -123,12 +123,12 @@ WHERE jaccard >= 0.9
 def l2_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by distinct-token Jaccard ≥ 0.9 over the
     token-set pair primitive (T.token_set_pairs), which picks one of
-    two exact regimes from a vocabulary probe:
+    two exact regimes from one capped vocabulary probe:
 
     DENSE (global vocab ≤ 64 — this fixture's 31-word synthetic corpus
-    at every SF): each doc's token set folds into one BIGINT mask,
-    |A∩B| = bit_count(a & b), and the n²/2 pairs evaluate as a
-    broadcast pair scan of narrow mask rows. The r1–r11 inverted-index
+    at every SF): a per-row fold turns each doc's token set into one
+    BIGINT mask, |A∩B| = bit_count(a & b), and the n²/2 pairs evaluate
+    as a broadcast pair scan of narrow mask rows. The r1–r11 inverted-index
     form degenerated here — every token bucket held ~all docs, so it
     generated the SAME Ω(n²) pairs ~31× over (~190M intermediate rows,
     148 s at sf0.1) and paid a pair-count shuffle to collapse them;

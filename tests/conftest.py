@@ -16,7 +16,7 @@ SF_ORACLE = os.environ.get("DWOS_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from data_wrangling_openstreetmap_spark.session import get_spark
 
-    spark = get_spark(app_name="dwos-tests", cpus="8", shuffle_partitions=8)
+    spark = get_spark(app_name="dwos-tests", cpus=None, shuffle_partitions=8)
     yield spark
     spark.stop()
 

@@ -20,7 +20,7 @@ def main() -> None:
     _ensure_loaded()
     only = set(sys.argv[1:])
     os.makedirs(GOLDEN_DIR, exist_ok=True)
-    spark = get_spark(app_name="make-golden", cpus="8", shuffle_partitions=8)
+    spark = get_spark(app_name="make-golden", cpus=None, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     for name, spec in sorted(REGISTRY.items()):
         if only and name not in only:

@@ -6,9 +6,10 @@ Execution model (round-11 suite-time lever): all ~490 checks run once
 inside a session-scoped fixture on a small thread pool — Spark job
 submission and DuckDB both release the GIL, so the per-query latency
 (job scheduling + Arrow collect + oracle run) overlaps across workers
-while local[8] keeps the cores busy. Each per-query test then asserts
-its own cached verdict, so pytest granularity and failure messages are
-unchanged. DWOS_SUITE_THREADS=1 restores strictly sequential checking.
+while the local[$SPARK_GRAFT_CPUS] session keeps the cores busy. Each
+per-query test then asserts its own cached verdict, so pytest
+granularity and failure messages are unchanged. DWOS_SUITE_THREADS=1
+restores strictly sequential checking.
 Thread-safety audit: every temp view / temp function / UDTF / variable
 name in the package is query-unique (grepped, round 11); the two
 catalog writers (Derby DDL is the one shared mutable resource) are

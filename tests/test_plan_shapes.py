@@ -429,8 +429,9 @@ BOUNDED_COLLECT_SITES = {
         "outputs = [df.toArrow for df in audits.values()] + _sink_writes(tables, docs, out_dir)",
         1,
     ),
-    # dense-regime vocabulary probe: cap+1 rows by the limit() in
-    # `probe` (functions/text.py::dense_token_masks — optimization r12)
+    # token-set regime probe, the build's only action: cap+1 rows by
+    # the limit() in `probe` (functions/text.py::dense_token_masks);
+    # ≤ cap rows are the exact vocabulary, cap+1 means sparse
     (
         "functions/text.py",
         "vocab = sorted(r[0] for r in probe.collect())  # bounded: limit(cap+1) above",
@@ -505,6 +506,10 @@ AGGREGATE_FOLD_SITES = {
     # simhash bit votes: fold is the DEFINITION (oracle mirrors the
     # same vote recurrence); empty shingle set needs precond
     ("functions/text.py", 'vote = F.aggregate(th, F.lit(0), vote_for_bit(b))', 1),  # mirrored+precond
+    # dense token-set masks: the rows are filtered to size(toks) > 0, so
+    # no empty or NULL array reaches the fold, and split() never yields
+    # a NULL token
+    ("functions/text.py", 'mask = F.aggregate(', 1),  # guarded
     ("functions/vectors.py", 'F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)', 1),  # total (fixed-dim)
     ("functions/vectors.py", 'return F.aggregate(', 1),  # total (fixed-dim dot)
     ("operators/composites.py", 'F.aggregate(', 1),  # total: items = collect over non-empty order group, qty non-null

@@ -6,8 +6,9 @@ pin the NEW internals' edge behavior that the fixture cannot exercise:
 
 - the dense/sparse regime split of the token-set pair primitive
   (the fixture's 31-word vocabulary always takes the dense branch, so
-  each caller's regime EQUIVALENCE and the >64-vocab refusal need
-  synthetic corpora);
+  each caller's regime EQUIVALENCE, duplicate ids, the real 64/65
+  vocabulary boundary and the >64-vocab refusal need synthetic
+  corpora), and the dense build's cost as a job count;
 - the vectorized top-k kernel's boundary semantics (blocks with fewer
   than k non-self candidates — the case where the -inf self-masking
   could diverge from the old remove-then-slice loop).
@@ -67,6 +68,20 @@ _PAIR_CALLERS = {
 }
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _brute_force_pairs(rows):
+    sets = [(i, set(t.split())) for i, t in rows if t]
+    return sorted(
+        (a, b, len(sa), len(sb), len(sa & sb))
+        for a, sa in sets
+        for b, sb in sets
+        if a < b and sa & sb
+    )
+
+
 @pytest.mark.parametrize("caller", sorted(_PAIR_CALLERS))
 def test_dense_regime_equals_sparse_regime(spark, tmp_path, monkeypatch, caller):
     # small closed vocabulary: empty and NULL text, duplicate tokens,
@@ -86,21 +101,25 @@ def test_dense_regime_equals_sparse_regime(spark, tmp_path, monkeypatch, caller)
         "red green blue black",             # same size as 1, jac 3/5
         "orange purple",                    # same set as 4
     ]
-    spark.createDataFrame(
-        [(i + 1, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    ).write.parquet(str(tmp_path / "documents.parquet"))
+    # a second row under doc_id 2 with its own token set: each row
+    # pairs on its own tokens in both regimes, never on their union
+    rows = [(i + 1, t) for i, t in enumerate(texts)] + [(2, "orange cyan black")]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
     run = _PAIR_CALLERS[caller]
     dense = run(spark, str(tmp_path))
     monkeypatch.setattr(T, "DENSE_VOCAB_CAP", 0)
     sparse = run(spark, str(tmp_path))
-    assert "BroadcastNestedLoopJoin" in dense._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in sparse._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" in _executed_plan(dense)
+    assert "BroadcastNestedLoopJoin" not in _executed_plan(sparse)
     assert dense.schema.simpleString() == sparse.schema.simpleString()
     d, s = sorted(map(tuple, dense.collect())), sorted(map(tuple, sparse.collect()))
     assert d == s
     if caller == "pairs":
         # every pair sharing a token, none that share nothing
         assert (1, 10, 4, 4, 3) in d and (4, 11, 2, 2, 2) in d
+        assert (1, 2, 4, 4, 4) in d and (2, 4, 3, 2, 1) in d  # both id-2 rows
         assert not any(a == 4 and b == 6 for a, b, *_ in d)
         assert not any({a, b} & {7, 8} for a, b, *_ in d)  # token-less docs
     elif caller == "containment":
@@ -109,6 +128,69 @@ def test_dense_regime_equals_sparse_regime(spark, tmp_path, monkeypatch, caller)
         assert not any({a, b} <= {1, 2, 5} for a, b, _ in d)
     else:
         assert (1, 2, 1.0) in d and (1, 5, 1.0) in d and (4, 11, 1.0) in d
+
+
+def test_vocab_of_exactly_cap_tokens_takes_dense_plan(spark, monkeypatch):
+    # "t00".."t63": the cap exactly, and "t63" sorts last, so it owns
+    # bit 63 — the BIGINT sign bit
+    vocab = [f"t{i:02d}" for i in range(T.DENSE_VOCAB_CAP)]
+    rows = [
+        (1, " ".join(vocab[:32])),
+        (2, " ".join(vocab[32:])),
+        (3, "t63 t00"),
+        (4, "t62 t63 t63"),
+        (5, "t63"),
+        (6, ""),
+        (7, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    masks = T.dense_token_masks(df, "doc_id").collect()
+    masks = {r["doc_id"]: (r["__mask"], r["__n"]) for r in masks}
+    assert sorted(masks) == [1, 2, 3, 4, 5]  # empty and NULL text: no mask row
+    assert masks[5] == (-(2**63), 1)
+    dense = T.token_set_pairs(df, "doc_id", "text", spark)
+    assert "BroadcastNestedLoopJoin" in _executed_plan(dense)
+    d = sorted(map(tuple, dense.collect()))
+    assert d == _brute_force_pairs(rows)
+    assert (3, 5, 2, 1, 1) in d and (4, 5, 2, 1, 1) in d  # shared only in bit 63
+    monkeypatch.setattr(T, "DENSE_VOCAB_CAP", 0)
+    sparse = T.token_set_pairs(df, "doc_id", "text", spark)
+    assert sorted(map(tuple, sparse.collect())) == d
+
+
+def test_vocab_of_cap_plus_one_tokens_is_sparse(spark):
+    vocab = [f"t{i:02d}" for i in range(T.DENSE_VOCAB_CAP + 1)]
+    rows = [(1, " ".join(vocab[:40])), (2, " ".join(vocab[30:])), (3, ""), (4, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    assert T.dense_token_masks(df, "doc_id") is None
+    pairs = T.token_set_pairs(df, "doc_id", "text", spark)
+    assert "BroadcastNestedLoopJoin" not in _executed_plan(pairs)
+    assert sorted(map(tuple, pairs.collect())) == _brute_force_pairs(rows)
+
+
+@pytest.mark.parametrize("caller", sorted(_PAIR_CALLERS))
+def test_dense_build_fires_at_most_two_jobs(spark, sf_dir, monkeypatch, caller):
+    # the build's only action is the capped vocabulary probe (a distinct
+    # exchange and its limited collect); the table scan is resolved
+    # first, since its schema read is a job shared per session
+    monkeypatch.delenv("DWOS_FULL_PLAN", raising=False)
+    load_table(spark, sf_dir, "documents")
+    sc = spark.sparkContext
+    group = f"test-token-set-build-{caller}"
+    sc.setJobGroup(group, f"{caller} build")
+    try:
+        _PAIR_CALLERS[caller](spark, sf_dir)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 2, f"{caller} build fired {len(jobs)} Spark jobs"
+    # the masks are a per-row projection of the scan: no aggregate below
+    # the pair scan, even with checkpoints neutralized
+    monkeypatch.setenv("DWOS_FULL_PLAN", "1")
+    plan = _executed_plan(_PAIR_CALLERS[caller](spark, sf_dir))
+    bnlj = plan[plan.index("BroadcastNestedLoopJoin"):]
+    assert "HashAggregate" not in bnlj
 
 
 def _loop_topk(q_ids, all_ids, S, k):

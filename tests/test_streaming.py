@@ -858,9 +858,9 @@ def test_stream_sliding_extrema_converges_under_jittered_arrival(
 
 
 # -- state partitions sized at start, sentinel projected in the JVM ---------
-# The suite session runs local[8] with 8 shuffle partitions, where
-# min(partitions, defaultParallelism) is the conf itself; these tests
-# raise the conf to 32 so the sizing path is actually taken.
+# The suite session runs local[$SPARK_GRAFT_CPUS] with 8 shuffle
+# partitions, where min(partitions, defaultParallelism) can be the conf
+# itself; these tests raise the conf to 32 so the sizing path is taken.
 
 _PARTITIONS = "spark.sql.shuffle.partitions"
 
