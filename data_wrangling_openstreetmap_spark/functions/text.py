@@ -318,7 +318,11 @@ def token_set_pairs(df, id_col: str, text_col: str, spark):
             .filter(F.col("common") > 0)
         )
     toks = distinct_tokens(F.col(text_col))
-    rows = df.select(
+    # __row keys each input row, so rows sharing an id (and a token
+    # count) keep their own pair counts, as in the dense regime. It is
+    # projected before the explode, which would evaluate it per output row.
+    rows = df.select(F.monotonically_increasing_id().alias("__row"), "*").select(
+        "__row",
         F.col(id_col).alias("__id"),
         F.size(toks).alias("__n"),
         F.explode(toks).alias("__tok"),
@@ -326,11 +330,13 @@ def token_set_pairs(df, id_col: str, text_col: str, spark):
     a, b = rows.alias("a"), rows.alias("b")
     return (
         a.join(b, (F.col("a.__tok") == F.col("b.__tok")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(
+        .groupBy("a.__row", "b.__row", "a.__id", "b.__id", "a.__n", "b.__n")
+        .agg(F.count("*").cast("int").alias("common"))
+        .select(
             F.col("a.__id").alias("id_a"),
             F.col("b.__id").alias("id_b"),
             F.col("a.__n").alias("na"),
             F.col("b.__n").alias("nb"),
+            "common",
         )
-        .agg(F.count("*").cast("int").alias("common"))
     )

@@ -33,14 +33,19 @@ def osm_wrangle_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     workdir = tempfile.mkdtemp(prefix="osm_demo_")
     osm_path = generate_osm_xml(spark, sf_dir, workdir, max_nodes=300)
-    tables, docs, audits = run_pipeline(spark, osm_path, out_dir=f"{workdir}/out")
+    out_dir = f"{workdir}/out"
+    tables, docs, audits = run_pipeline(spark, osm_path, out_dir=out_dir)
+    # row counts come from the sinks just written, not from the lazy
+    # frames, so the summary does not parse the XML again
+    sinks = {
+        name: spark.read.schema(df.schema).option("header", True).csv(f"{out_dir}/csv/{name}")
+        for name, df in tables.items()
+    }
+    sinks["documents"] = spark.read.schema(docs.schema).json(f"{out_dir}/json/documents")
     parts = [
         df.select(F.lit(f"rows_{name}").alias("metric"), F.count("*").alias("value"))
-        for name, df in tables.items()
+        for name, df in sinks.items()
     ]
-    parts.append(
-        docs.select(F.lit("rows_documents").alias("metric"), F.count("*").alias("value"))
-    )
     parts.append(
         audits["tag_keys"].select(
             F.concat(F.lit("tagkeys_"), F.col("bucket")).alias("metric"),

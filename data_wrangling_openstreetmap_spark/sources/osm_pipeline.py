@@ -12,10 +12,12 @@ lifecycle re-expressed declaratively:
   boundaries are per-element, so input splits parallelize cleanly.
 - P3  audit: regex triage of tag keys (lower / lower_colon /
   problemchars / other) as one `when` chain — a single projection.
-- P4/P5 clean: street-type extraction (`regexp_extract` of the last
-  word) looked up in the normalization mapping as a map literal;
-  postcode digits via regex.
-- U5  shape: nested documents as native structs/arrays/maps.
+- P4/P5 clean: `tag_entries` types and cleans one tag struct as a
+  Column function — the `addr:street` → (type, key) split, the street
+  type (`regexp_extract` of the last word) looked up in the
+  normalization mapping as a map literal, postcode digits via regex.
+- U5  shape: each node's document is one per-row projection of its
+  own cleaned tags, as the reference's `shape_element` builds it.
 - flatten: `posexplode` junction tables — the reference's SQLite star
   (nodes, nodes_tags, ways, ways_tags, ways_nodes).
 - S4/S5 sinks: header CSV per flat table, line-delimited JSON docs.
@@ -24,9 +26,9 @@ Everything is built-in Column expressions; zero Python UDFs.
 
 `run_pipeline` parses the extract once per row tag, as the reference's
 single iterparse pass does: the node and way scans are persisted, and
-the six sink writes and the two audit aggregations then run as
-concurrent Spark jobs over those two cached scans. The audits come
-back as small local frames.
+the documents write, the two audit aggregations and the five table
+writes all start at once as concurrent Spark jobs over those two
+cached scans. The audits come back as small local frames.
 """
 
 from __future__ import annotations
@@ -36,7 +38,7 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor, wait
 
 from pyspark import StorageLevel, inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 NODE_SCHEMA = (
@@ -72,6 +74,8 @@ STREET_MAPPING = {
 LOWER_RE = r"^[a-z_]+\z"
 LOWER_COLON_RE = r"^[a-z_]+:[a-z_]+\z"
 PROBLEM_RE = r"[=\+/&<>;'\"\?%#$@\,\. \t\r\n]"
+# The last word of a street value (the reference's street_type_re).
+STREET_TYPE_RE = r"([^\t\n\f\r ]+\.?)\z"
 
 
 def read_nodes(spark: SparkSession, osm_path: str) -> DataFrame:
@@ -92,28 +96,49 @@ def read_ways(spark: SparkSession, osm_path: str) -> DataFrame:
     )
 
 
-def explode_tags(elements: DataFrame) -> DataFrame:
-    """(id, key, value) rows from the tag array — `nodes_tags` shape.
-    Splits `addr:street` style keys into (type='addr', key='street'),
-    exactly the reference's shaping rule."""
-    kv = elements.select(
-        F.col("_id").alias("id"), F.explode_outer("tag").alias("t")
-    ).filter(F.col("t").isNotNull())
-    has_colon = F.col("t._k").contains(":")
-    return kv.select(
-        "id",
-        F.when(has_colon, F.substring_index(F.col("t._k"), ":", 1))
-        .otherwise(F.lit("regular"))
-        .alias("type"),
-        F.when(
-            has_colon,
-            F.expr("substring(t._k, instr(t._k, ':') + 1)"),
+def tag_entries(tags: Column, clean: bool = False) -> Column:
+    """One struct (type, key, value, raw_key) per non-NULL `<tag>` of an
+    element's tag array, by the reference's shaping rule: `addr:street`
+    splits at its first colon into (type='addr', key='street'), and a
+    key without a colon is (type='regular', key=raw key).
+
+    With `clean`, the value is normalized as the reference's
+    `update_name` and postcode audit do: an `addr:street` value gets its
+    last word looked up in STREET_MAPPING (a map literal, so no plan
+    has a join or a Python-side relation), and an `addr:postcode` value
+    keeps its 5 digits or becomes NULL for review."""
+    def entry(t: Column) -> Column:
+        k, v = t["_k"], t["_v"]
+        value = v
+        if clean:
+            street_type = F.regexp_extract(v, STREET_TYPE_RE, 1)
+            mapping = F.create_map(*(F.lit(w) for pair in STREET_MAPPING.items() for w in pair))
+            canonical = F.element_at(mapping, street_type)
+            five = F.regexp_extract(v, r"^(\d{5})\z", 1)
+            value = (
+                F.when(
+                    (k == "addr:street") & canonical.isNotNull(),
+                    F.concat(v.substr(F.lit(1), F.length(v) - F.length(street_type)), canonical),
+                )
+                .when(k == "addr:postcode", F.when(five != "", five))
+                .otherwise(v)
+            )
+        return F.struct(
+            F.when(k.contains(":"), F.substring_index(k, ":", 1)).otherwise("regular").alias("type"),
+            k.substr(F.instr(k, ":") + 1, F.length(k)).alias("key"),
+            value.alias("value"),
+            k.alias("raw_key"),
         )
-        .otherwise(F.col("t._k"))
-        .alias("key"),
-        F.col("t._v").alias("value"),
-        F.col("t._k").alias("raw_key"),
-    )
+
+    return F.transform(F.filter(tags, lambda t: t.isNotNull()), entry)
+
+
+def explode_tags(elements: DataFrame, entries: Column | None = None) -> DataFrame:
+    """(id, type, key, value, raw_key) rows, one per tag: the inline of
+    `entries`, by default the raw `tag_entries` of the `tag` column."""
+    if entries is None:
+        entries = tag_entries(F.col("tag"))
+    return elements.select(F.col("_id").alias("id"), F.inline(entries))
 
 
 def audit_tag_keys(tags: DataFrame) -> DataFrame:
@@ -135,97 +160,61 @@ def audit_tag_keys(tags: DataFrame) -> DataFrame:
 def audit_street_types(tags: DataFrame) -> DataFrame:
     """Street-type histogram: last word of each addr:street value
     (the reference's `street_type_re = r'\\b\\S+\\.?$'` audit)."""
-    streets = tags.filter(
-        (F.col("type") == "addr") & (F.col("key") == "street")
-    )
     return (
-        streets.select(
-            F.regexp_extract(F.col("value"), r"([^\t\n\f\r ]+\.?)\z", 1).alias("street_type")
-        )
-        .groupBy("street_type")
+        tags.filter((F.col("type") == "addr") & (F.col("key") == "street"))
+        .groupBy(F.regexp_extract(F.col("value"), STREET_TYPE_RE, 1).alias("street_type"))
         .agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), "street_type")
     )
 
 
-def clean_streets(tags: DataFrame) -> DataFrame:
-    """Normalize street values: look the last word up in the mapping and
-    rebuild the value with the canonical type — the reference's
-    `update_name(name, mapping)` as one projection. The mapping is a
-    map literal, so the plan has no join and no Python-side relation.
-    Non-street tags pass through untouched."""
-    is_street = (F.col("type") == "addr") & (F.col("key") == "street")
-    street_type = F.regexp_extract(F.col("value"), r"([^\t\n\f\r ]+\.?)\z", 1)
-    mapping = F.create_map(*(F.lit(w) for pair in STREET_MAPPING.items() for w in pair))
-    typed = tags.withColumn("street_type", F.when(is_street, street_type)).withColumn(
-        "clean", F.element_at(mapping, F.col("street_type"))
-    )
-    cleaned_value = F.when(
-        is_street & F.col("clean").isNotNull(),
-        F.concat(
-            F.expr("substring(value, 1, length(value) - length(street_type))"),
-            F.col("clean"),
-        ),
-    ).otherwise(F.col("value"))
-    return typed.select(
-        "id", "type", "key", cleaned_value.alias("value"), "raw_key"
+def shape_documents(nodes: DataFrame, entries: Column) -> DataFrame:
+    """Nested-document shape (the reference's Mongo path), built like
+    its `shape_element`, from each node's own tags: {id, type, pos,
+    created{...}, address{street, postcode}, tags map}, where `entries`
+    are the node's cleaned `tag_entries`. An address field is the first
+    entry of its `addr:` key with a non-NULL value; `tags` maps every
+    other raw key to its value and is NULL when there is none. One
+    per-row projection: no explode, group-by, pivot or join."""
+    def first_addr(key: str) -> Column:
+        hits = F.filter("e", lambda e: (e["raw_key"] == f"addr:{key}") & e["value"].isNotNull())
+        # try_: under ANSI, element_at raises on an empty array
+        return F.try_element_at(hits, F.lit(1))["value"].alias(key)
+
+    def other(e: Column) -> Column:
+        return e["type"] != "addr"
+
+    # `e` is projected first, so the three reads below share one evaluation
+    return nodes.select(
+        F.col("_id").alias("id"),
+        F.lit("node").alias("element_type"),
+        F.array("_lat", "_lon").alias("pos"),
+        F.struct(
+            F.col("_user").alias("user"),
+            F.col("_uid").alias("uid"),
+            F.col("_version").alias("version"),
+            F.col("_changeset").alias("changeset"),
+            F.col("_timestamp").alias("timestamp"),
+        ).alias("created"),
+        entries.alias("e"),
+    ).select(
+        "id",
+        "element_type",
+        "pos",
+        "created",
+        F.struct(first_addr("street"), first_addr("postcode")).alias("address"),
+        F.when(
+            F.exists("e", other),
+            F.map_from_entries(
+                F.transform(F.filter("e", other), lambda e: F.struct(e["raw_key"], e["value"]))
+            ),
+        ).alias("tags"),
     )
 
 
-def clean_postcodes(tags: DataFrame) -> DataFrame:
-    """Postcode standardization: keep 5-digit codes, null out the rest
-    (the reference nulls non-conforming postcodes for review)."""
-    is_post = (F.col("type") == "addr") & (F.col("key") == "postcode")
-    five = F.regexp_extract(F.col("value"), r"^(\d{5})\z", 1)
-    return tags.withColumn(
-        "value",
-        F.when(is_post, F.when(five != "", five)).otherwise(F.col("value")),
-    )
-
-
-def shape_documents(nodes: DataFrame, clean_tags: DataFrame) -> DataFrame:
-    """Nested-document shape (the reference's Mongo path):
-    {id, type, pos, created{...}, address{...}, tags map}."""
-    addr = (
-        clean_tags.filter((F.col("type") == "addr") & F.col("value").isNotNull())
-        .groupBy("id")
-        .pivot("key", ["street", "postcode"])
-        .agg(F.first("value"))
-    )
-    other = (
-        clean_tags.filter(F.col("type") != "addr")
-        .groupBy("id")
-        .agg(F.map_from_entries(F.collect_list(F.struct("key", "value"))).alias("tags"))
-    )
-    docs = (
-        nodes.select(
-            F.col("_id").alias("id"),
-            F.lit("node").alias("element_type"),
-            F.array("_lat", "_lon").alias("pos"),
-            F.struct(
-                F.col("_user").alias("user"),
-                F.col("_uid").alias("uid"),
-                F.col("_version").alias("version"),
-                F.col("_changeset").alias("changeset"),
-                F.col("_timestamp").alias("timestamp"),
-            ).alias("created"),
-        )
-        .join(addr, "id", "left")
-        .join(other, "id", "left")
-        .select(
-            "id",
-            "element_type",
-            "pos",
-            "created",
-            F.struct(F.col("street"), F.col("postcode")).alias("address"),
-            "tags",
-        )
-    )
-    return docs
-
-
-def flatten(nodes: DataFrame, ways: DataFrame, clean_node_tags: DataFrame):
-    """The reference's SQLite star: nodes, nodes_tags, ways, ways_tags,
+def flatten(nodes: DataFrame, ways: DataFrame, node_entries: Column):
+    """The reference's SQLite star: nodes, nodes_tags (the explode of
+    `node_entries`, the cleaned `tag_entries`), ways, ways_tags,
     ways_nodes (ordered junction via posexplode)."""
     nodes_flat = nodes.select(
         F.col("_id").alias("id"),
@@ -249,7 +238,7 @@ def flatten(nodes: DataFrame, ways: DataFrame, clean_node_tags: DataFrame):
     ways_nodes = ways.select(
         F.col("_id").alias("id"), F.posexplode("nd").alias("position", "ndref")
     ).select("id", F.col("ndref._ref").alias("node_id"), "position")
-    nodes_tags = clean_node_tags.select("id", "key", "value", "type")
+    nodes_tags = explode_tags(nodes, node_entries).select("id", "key", "value", "type")
     return {
         "nodes": nodes_flat,
         "nodes_tags": nodes_tags,
@@ -262,15 +251,16 @@ def flatten(nodes: DataFrame, ways: DataFrame, clean_node_tags: DataFrame):
 def _sink_writes(
     tables: dict[str, DataFrame], docs: DataFrame, out_dir: str
 ) -> list[Callable[[], None]]:
-    """S4 CSV (flat star) + S5 line-delimited JSON (nested docs), one
-    callable per sink, each running one write job."""
+    """S5 line-delimited JSON (nested docs) + S4 CSV (flat star), one
+    callable per sink, each running one write job; the documents come
+    first."""
     def csv(name: str, df: DataFrame) -> Callable[[], None]:
         return lambda: df.write.mode("overwrite").option("header", True).csv(
             os.path.join(out_dir, "csv", name)
         )
 
-    return [csv(name, df) for name, df in tables.items()] + [
-        lambda: docs.write.mode("overwrite").json(os.path.join(out_dir, "json/documents"))
+    return [lambda: docs.write.mode("overwrite").json(os.path.join(out_dir, "json/documents"))] + [
+        csv(name, df) for name, df in tables.items()
     ]
 
 
@@ -302,12 +292,15 @@ def run_pipeline(spark: SparkSession, osm_path: str, out_dir: str):
     under `out_dir`. Returns (tables, docs, audits).
 
     The XML is parsed once per row tag: the node and way scans are
-    persisted (MEMORY_AND_DISK) and filled by two concurrent jobs, then
-    the six sink writes and the two audit aggregations run as
-    concurrent jobs over them, at most `defaultParallelism` at a time.
-    Each job runs in the caller's job group. Both scans are unpersisted
-    before this returns or raises; when an output fails, the others
-    still finish and the first failure is raised.
+    persisted (MEMORY_AND_DISK), and all eight outputs start at once as
+    concurrent jobs over them, at most `defaultParallelism` at a time:
+    the documents write (the longest job) first, then the two audit
+    aggregations, then the five table writes. The first task that reads
+    a cached partition parses it; a concurrent reader of that partition
+    waits for the block and reads it from the cache. Each job runs in
+    the caller's job group. Both scans are unpersisted before this
+    returns or raises; when an output fails, the others still finish
+    and the first failure is raised.
 
     `tables` and `docs` are lazy frames over the raw XML. The two
     `audits` frames are materialized: each is collected once over the
@@ -315,10 +308,14 @@ def run_pipeline(spark: SparkSession, osm_path: str, out_dir: str):
     no Spark job and does not parse the XML again."""
     nodes = read_nodes(spark, osm_path)
     ways = read_ways(spark, osm_path)
-    raw_tags = explode_tags(nodes)
-    cleaned = clean_postcodes(clean_streets(raw_tags))
+    cleaned = tag_entries(F.col("tag"), clean=True)
     tables = flatten(nodes, ways, cleaned)
     docs = shape_documents(nodes, cleaned)
+    raw_tags = explode_tags(nodes)
+    if nodes.rdd.getNumPartitions() == 1:
+        # the one partition holds every tag: saying so lets each audit
+        # aggregate in place, in one job with no exchange
+        raw_tags = raw_tags.coalesce(1)
     audits = {
         "tag_keys": audit_tag_keys(raw_tags),
         "street_types": audit_street_types(raw_tags),
@@ -328,9 +325,9 @@ def run_pipeline(spark: SparkSession, osm_path: str, out_dir: str):
         scan.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
-            _run_concurrently(spark, pool, [scan.count for scan in scans])
-            outputs = [df.toArrow for df in audits.values()] + _sink_writes(tables, docs, out_dir)
-            arrow = _run_concurrently(spark, pool, outputs)[: len(audits)]
+            docs_write, *table_writes = _sink_writes(tables, docs, out_dir)
+            outputs = [docs_write] + [df.toArrow for df in audits.values()] + table_writes
+            arrow = _run_concurrently(spark, pool, outputs)[1 : 1 + len(audits)]
     finally:
         for scan in scans:
             scan.unpersist()

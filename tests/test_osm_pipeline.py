@@ -241,3 +241,230 @@ def test_audits_of_tagless_extract_are_typed_and_empty(spark, tmp_path):
     assert audits["street_types"].schema == P.audit_street_types(raw_tags).schema
     assert audits["tag_keys"].collect() == []
     assert audits["street_types"].collect() == []
+
+
+# -- per-row documents against the explode → groupBy → pivot → join form --
+
+def _reference_documents(nodes, clean_tags):
+    """The documents as the pipeline shaped them before they became one
+    per-row projection: explode → groupBy(id) → pivot → two joins. The
+    `tags` map is keyed by the raw tag key, as `shape_documents` keys it."""
+    addr = (
+        clean_tags.filter((F.col("type") == "addr") & F.col("value").isNotNull())
+        .groupBy("id")
+        .pivot("key", ["street", "postcode"])
+        .agg(F.first("value"))
+    )
+    other = (
+        clean_tags.filter(F.col("type") != "addr")
+        .groupBy("id")
+        .agg(F.map_from_entries(F.collect_list(F.struct("raw_key", "value"))).alias("tags"))
+    )
+    return (
+        nodes.select(
+            F.col("_id").alias("id"),
+            F.lit("node").alias("element_type"),
+            F.array("_lat", "_lon").alias("pos"),
+            F.struct(
+                F.col("_user").alias("user"),
+                F.col("_uid").alias("uid"),
+                F.col("_version").alias("version"),
+                F.col("_changeset").alias("changeset"),
+                F.col("_timestamp").alias("timestamp"),
+            ).alias("created"),
+        )
+        .join(addr, "id", "left")
+        .join(other, "id", "left")
+        .select(
+            "id",
+            "element_type",
+            "pos",
+            "created",
+            F.struct(F.col("street"), F.col("postcode")).alias("address"),
+            "tags",
+        )
+    )
+
+
+def _reference_clean_tags(raw_tags):
+    """Street and postcode cleaning as the two DataFrame passes it was
+    before it became one Column function (`tag_entries(clean=True)`)."""
+    is_street = (F.col("type") == "addr") & (F.col("key") == "street")
+    street_type = F.regexp_extract(F.col("value"), P.STREET_TYPE_RE, 1)
+    mapping = F.create_map(*(F.lit(w) for pair in P.STREET_MAPPING.items() for w in pair))
+    typed = raw_tags.withColumn("street_type", F.when(is_street, street_type)).withColumn(
+        "clean", F.element_at(mapping, F.col("street_type"))
+    )
+    streets = typed.select(
+        "id",
+        "type",
+        "key",
+        F.when(
+            is_street & F.col("clean").isNotNull(),
+            F.concat(
+                F.expr("substring(value, 1, length(value) - length(street_type))"),
+                F.col("clean"),
+            ),
+        )
+        .otherwise(F.col("value"))
+        .alias("value"),
+        "raw_key",
+    )
+    is_post = (F.col("type") == "addr") & (F.col("key") == "postcode")
+    five = F.regexp_extract(F.col("value"), r"^(\d{5})\z", 1)
+    return streets.withColumn(
+        "value", F.when(is_post, F.when(five != "", five)).otherwise(F.col("value"))
+    )
+
+
+_NODE = (
+    '<node id="{}" lat="43.{}" lon="-79.{}" user="u{}" uid="{}" version="1" '
+    'changeset="1" timestamp="2024-01-01T00:00:00Z"'
+)
+_EDGE_TAGS = {
+    1: [],  # no tags
+    2: [("addr:street", "Oak Ave"), ("addr:postcode", "12345")],  # only addr
+    3: [  # two addr:street; the first postcode is malformed
+        ("addr:street", "Main St."),
+        ("addr:street", "Lake Rd"),
+        ("addr:postcode", "M5J 2N5"),
+        ("addr:postcode", "54321"),
+        ("amenity", "cafe"),
+    ],
+    4: [("addr:postcode", "M5J 2N5"), ("name", "Corner")],  # only postcode malformed
+    5: [("bad key", "problem chars"), ("addr:street", "Harbor Blvd")],  # problem chars
+    6: [  # colon keys, two sharing the sub-key 'county'
+        ("tiger:county", "Erie, NY"),
+        ("gnis:county", "Erie"),
+        ("addr:city", "Buffalo"),
+        ("a:b:c", "deep"),
+        ("addr:street", "Broadway"),
+    ],
+}
+
+
+def _write_extract(path, node_tags: dict) -> str:
+    nodes = []
+    for i, tags in node_tags.items():
+        head = _NODE.format(i, i, i, i, i)
+        if not tags:
+            nodes.append(head + "/>\n")
+            continue
+        body = "".join(f'  <tag k="{k}" v="{v}"/>\n' for k, v in tags)
+        nodes.append(f"{head}>\n{body}</node>\n")
+    ids = sorted(node_tags)
+    way = (
+        '<way id="100" user="u" uid="1" version="1" changeset="1" '
+        'timestamp="2024-02-01T00:00:00Z">\n'
+        + "".join(f'  <nd ref="{i}"/>\n' for i in ids[:2])
+        + '  <tag k="highway" v="residential"/>\n</way>\n'
+    )
+    path.write_text(
+        '<?xml version="1.0" encoding="UTF-8"?>\n<osm version="0.6">\n'
+        + "".join(nodes) + way + "</osm>\n"
+    )
+    return str(path)
+
+
+def _rows(df, key="id"):
+    return [r.asDict(recursive=True) for r in df.orderBy(key).collect()]
+
+
+@pytest.fixture(scope="module")
+def edge_extract(tmp_path_factory):
+    return _write_extract(tmp_path_factory.mktemp("osm_edge") / "edge.osm", _EDGE_TAGS)
+
+
+@pytest.mark.parametrize("which", ["generated", "edge"])
+def test_per_row_shaping_matches_grouped_form(spark, extract, edge_extract, which):
+    path = extract[1] if which == "generated" else edge_extract
+    nodes = P.read_nodes(spark, path)
+    cleaned = P.tag_entries(F.col("tag"), clean=True)
+    clean_tags = _reference_clean_tags(P.explode_tags(nodes))
+    # nodes_tags: the one Column function cleans as the two passes did
+    got_tags = P.explode_tags(nodes, cleaned).select("id", "type", "key", "value", "raw_key")
+    assert sorted(map(tuple, got_tags.collect()), key=repr) == sorted(
+        map(tuple, clean_tags.collect()), key=repr
+    )
+    docs = P.shape_documents(nodes, cleaned)
+    want = _reference_documents(nodes, clean_tags)
+    assert docs.schema == want.schema
+    assert _rows(docs) == _rows(want)
+
+
+def test_edge_documents(spark, edge_extract):
+    nodes = P.read_nodes(spark, edge_extract)
+    docs = {r["id"]: r for r in _rows(P.shape_documents(nodes, P.tag_entries(F.col("tag"), clean=True)))}
+    assert docs[1]["address"] == {"street": None, "postcode": None} and docs[1]["tags"] is None
+    assert docs[2]["address"] == {"street": "Oak Avenue", "postcode": "12345"}
+    assert docs[2]["tags"] is None  # only addr tags
+    # the first entry of each key whose cleaned value is non-NULL
+    assert docs[3]["address"] == {"street": "Main Street", "postcode": "54321"}
+    assert docs[4]["address"] == {"street": None, "postcode": None}
+    assert docs[4]["tags"] == {"name": "Corner"}
+    assert docs[5]["tags"] == {"bad key": "problem chars"}
+    assert docs[6]["tags"] == {"tiger:county": "Erie, NY", "gnis:county": "Erie", "a:b:c": "deep"}
+    assert docs[6]["address"]["street"] == "Broadway"  # no mapped type: unchanged
+
+
+def test_colliding_tag_subkeys_do_not_crash_pipeline(spark, tmp_path):
+    path = _write_extract(
+        tmp_path / "tiger.osm",
+        {1: [("tiger:county", "Erie, NY"), ("gnis:county", "Erie")], 2: [("amenity", "cafe")]},
+    )
+    tables, docs, audits = P.run_pipeline(spark, path, str(tmp_path / "out"))
+    got = {r["id"]: r["tags"] for r in _rows(spark.read.schema(docs.schema).json(str(tmp_path / "out/json/documents")))}
+    assert got[1] == {"tiger:county": "Erie, NY", "gnis:county": "Erie"}
+    assert got[2] == {"amenity": "cafe"}
+    assert sorted(map(tuple, tables["nodes_tags"].filter("id = 1").collect())) == [
+        (1, "county", "Erie", "gnis"),
+        (1, "county", "Erie, NY", "tiger"),
+    ]
+    assert {r.bucket: r.n for r in audits["tag_keys"].collect()} == {"lower_colon": 2, "lower": 1}
+
+
+def test_documents_plan_has_no_exchange_join_or_explode(spark, extract):
+    nodes = P.read_nodes(spark, extract[1])
+    docs = P.shape_documents(nodes, P.tag_entries(F.col("tag"), clean=True))
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    for op in ("Exchange", "Join", "Generate"):
+        assert op not in plan, plan
+
+
+def test_demo_summary_does_not_parse_the_xml_again(spark, tmp_path):
+    import os
+
+    from data_wrangling_openstreetmap_spark.operators.osm_demo import osm_wrangle_demo
+
+    # the demo's extract: the same generator call on the same tables
+    size = os.path.getsize(generate_osm_xml(spark, SF, str(tmp_path), max_nodes=300))
+    summary = osm_wrangle_demo(spark, SF)
+    rows, jobs = _in_group(spark, "osm-demo-collect", summary.collect)
+    assert {r.metric for r in rows} >= {"rows_nodes", "rows_documents", "tagkeys_lower"}
+    store = spark.sparkContext._jsc.sc().statusStore()
+    inputs = []
+    for j in jobs:
+        sids = j.stageIds()
+        inputs += [store.lastStageAttempt(sids.apply(i)).inputBytes() for i in range(sids.size())]
+    assert any(b > 0 for b in inputs)  # it reads the sinks
+    assert size not in inputs
+
+
+def test_audits_of_a_split_extract_match_raw_aggregations(spark, tmp_path):
+    # two files, so the node scan has two partitions and the audits
+    # aggregate through an exchange instead of in place
+    src = tmp_path / "split"
+    src.mkdir()
+    _write_extract(src / "a.osm", {i: t for i, t in _EDGE_TAGS.items() if i <= 3})
+    _write_extract(src / "b.osm", {i: t for i, t in _EDGE_TAGS.items() if i > 3})
+    nodes = P.read_nodes(spark, str(src))
+    assert nodes.rdd.getNumPartitions() == 2
+    _, _, audits = P.run_pipeline(spark, str(src), str(tmp_path / "out"))
+    raw_tags = P.explode_tags(nodes)
+    assert sorted(map(tuple, audits["tag_keys"].collect())) == sorted(
+        map(tuple, P.audit_tag_keys(raw_tags).collect())
+    )
+    assert audits["street_types"].collect() == P.audit_street_types(raw_tags).collect()
+    assert {r.bucket for r in audits["tag_keys"].collect()} == {
+        "lower", "lower_colon", "problemchars", "other"
+    }

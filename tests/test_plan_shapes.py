@@ -426,7 +426,7 @@ BOUNDED_COLLECT_SITES = {
     # distinct street-type word — the reference's audit dict
     (
         "sources/osm_pipeline.py",
-        "outputs = [df.toArrow for df in audits.values()] + _sink_writes(tables, docs, out_dir)",
+        "outputs = [docs_write] + [df.toArrow for df in audits.values()] + table_writes",
         1,
     ),
     # token-set regime probe, the build's only action: cap+1 rows by

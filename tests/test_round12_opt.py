@@ -102,8 +102,14 @@ def test_dense_regime_equals_sparse_regime(spark, tmp_path, monkeypatch, caller)
         "orange purple",                    # same set as 4
     ]
     # a second row under doc_id 2 with its own token set: each row
-    # pairs on its own tokens in both regimes, never on their union
-    rows = [(i + 1, t) for i, t in enumerate(texts)] + [(2, "orange cyan black")]
+    # pairs on its own tokens in both regimes, never on their union;
+    # the two rows under doc_id 13 also share their token count
+    rows = [(i + 1, t) for i, t in enumerate(texts)] + [
+        (2, "orange cyan black"),
+        (12, "a b c"),
+        (13, "a b d"),
+        (13, "a x y"),
+    ]
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
         str(tmp_path / "documents.parquet")
     )
@@ -120,6 +126,7 @@ def test_dense_regime_equals_sparse_regime(spark, tmp_path, monkeypatch, caller)
         # every pair sharing a token, none that share nothing
         assert (1, 10, 4, 4, 3) in d and (4, 11, 2, 2, 2) in d
         assert (1, 2, 4, 4, 4) in d and (2, 4, 3, 2, 1) in d  # both id-2 rows
+        assert (12, 13, 3, 3, 2) in d and (12, 13, 3, 3, 1) in d  # both id-13 rows
         assert not any(a == 4 and b == 6 for a, b, *_ in d)
         assert not any({a, b} & {7, 8} for a, b, *_ in d)  # token-less docs
     elif caller == "containment":
