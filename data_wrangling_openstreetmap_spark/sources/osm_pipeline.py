@@ -248,20 +248,15 @@ def flatten(nodes: DataFrame, ways: DataFrame, node_entries: Column):
     }
 
 
-def _sink_writes(
-    tables: dict[str, DataFrame], docs: DataFrame, out_dir: str
-) -> list[Callable[[], None]]:
-    """S5 line-delimited JSON (nested docs) + S4 CSV (flat star), one
-    callable per sink, each running one write job; the documents come
-    first."""
+def _csv_writes(tables: dict[str, DataFrame], out_dir: str) -> list[Callable[[], None]]:
+    """S4 header CSV per flat table, one callable per sink, each running
+    one write job."""
     def csv(name: str, df: DataFrame) -> Callable[[], None]:
         return lambda: df.write.mode("overwrite").option("header", True).csv(
             os.path.join(out_dir, "csv", name)
         )
 
-    return [lambda: docs.write.mode("overwrite").json(os.path.join(out_dir, "json/documents"))] + [
-        csv(name, df) for name, df in tables.items()
-    ]
+    return [csv(name, df) for name, df in tables.items()]
 
 
 def top_contributors(tables: dict[str, DataFrame], k: int = 10) -> DataFrame:
@@ -294,11 +289,14 @@ def run_pipeline(spark: SparkSession, osm_path: str, out_dir: str):
     The XML is parsed once per row tag: the node and way scans are
     persisted (MEMORY_AND_DISK), and all eight outputs start at once as
     concurrent jobs over them, at most `defaultParallelism` at a time:
-    the documents write (the longest job) first, then the two audit
-    aggregations, then the five table writes. The first task that reads
-    a cached partition parses it; a concurrent reader of that partition
-    waits for the block and reads it from the cache. Each job runs in
-    the caller's job group. Both scans are unpersisted before this
+    the S5 line-delimited JSON documents write (the longest job) first,
+    then the two audit aggregations, then the five CSV table writes.
+    Within one executor (local mode, as the package and its tests run),
+    the first task that reads a cached partition parses it and a
+    concurrent reader of that partition waits for the block and reads it
+    from the cache; on a multi-executor cluster, tasks on different
+    executors can each parse the same uncached partition. Each job runs
+    in the caller's job group. Both scans are unpersisted before this
     returns or raises; when an output fails, the others still finish
     and the first failure is raised.
 
@@ -312,22 +310,22 @@ def run_pipeline(spark: SparkSession, osm_path: str, out_dir: str):
     tables = flatten(nodes, ways, cleaned)
     docs = shape_documents(nodes, cleaned)
     raw_tags = explode_tags(nodes)
-    if nodes.rdd.getNumPartitions() == 1:
-        # the one partition holds every tag: saying so lets each audit
-        # aggregate in place, in one job with no exchange
-        raw_tags = raw_tags.coalesce(1)
     audits = {
         "tag_keys": audit_tag_keys(raw_tags),
         "street_types": audit_street_types(raw_tags),
     }
+
+    def write_docs() -> None:
+        docs.write.mode("overwrite").json(os.path.join(out_dir, "json/documents"))
+
+    collects = [df.toArrow for df in audits.values()]
     scans = (nodes, ways)
     for scan in scans:
         scan.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
-            docs_write, *table_writes = _sink_writes(tables, docs, out_dir)
-            outputs = [docs_write] + [df.toArrow for df in audits.values()] + table_writes
-            arrow = _run_concurrently(spark, pool, outputs)[1 : 1 + len(audits)]
+            outputs = [write_docs, *collects, *_csv_writes(tables, out_dir)]
+            arrow = _run_concurrently(spark, pool, outputs)[1 : 1 + len(collects)]
     finally:
         for scan in scans:
             scan.unpersist()

@@ -426,7 +426,7 @@ BOUNDED_COLLECT_SITES = {
     # distinct street-type word — the reference's audit dict
     (
         "sources/osm_pipeline.py",
-        "outputs = [docs_write] + [df.toArrow for df in audits.values()] + table_writes",
+        "collects = [df.toArrow for df in audits.values()]",
         1,
     ),
     # token-set regime probe, the build's only action: cap+1 rows by
