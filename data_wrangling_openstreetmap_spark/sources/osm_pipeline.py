@@ -27,15 +27,16 @@ Everything is built-in Column expressions; zero Python UDFs.
 `run_pipeline` parses the extract once per row tag, as the reference's
 single iterparse pass does: the node and way scans are persisted, and
 the documents write, the two audit aggregations and the five table
-writes all start at once as concurrent Spark jobs over those two
-cached scans. The audits come back as small local frames.
+writes run as concurrent Spark jobs over those two cached scans, each
+started as soon as its frame is built. The audits come back as small
+local frames.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor, wait
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 
 from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -159,11 +160,14 @@ def audit_tag_keys(tags: DataFrame) -> DataFrame:
 
 def audit_street_types(tags: DataFrame) -> DataFrame:
     """Street-type histogram: last word of each addr:street value
-    (the reference's `street_type_re = r'\\b\\S+\\.?$'` audit)."""
+    (the reference's `street_type_re = r'\\b\\S+\\.?$'` audit). The
+    histogram has one row per distinct word, so it is sorted on one
+    partition: no range-partition sampling job and no sort shuffle."""
     return (
         tags.filter((F.col("type") == "addr") & (F.col("key") == "street"))
         .groupBy(F.regexp_extract(F.col("value"), STREET_TYPE_RE, 1).alias("street_type"))
         .agg(F.count("*").alias("n"))
+        .coalesce(1)
         .orderBy(F.col("n").desc(), "street_type")
     )
 
@@ -248,7 +252,7 @@ def flatten(nodes: DataFrame, ways: DataFrame, node_entries: Column):
     }
 
 
-def _csv_writes(tables: dict[str, DataFrame], out_dir: str) -> list[Callable[[], None]]:
+def _csv_writes(tables: dict[str, DataFrame], out_dir: str) -> dict[str, Callable[[], None]]:
     """S4 header CSV per flat table, one callable per sink, each running
     one write job."""
     def csv(name: str, df: DataFrame) -> Callable[[], None]:
@@ -256,7 +260,7 @@ def _csv_writes(tables: dict[str, DataFrame], out_dir: str) -> list[Callable[[],
             os.path.join(out_dir, "csv", name)
         )
 
-    return [csv(name, df) for name, df in tables.items()]
+    return {name: csv(name, df) for name, df in tables.items()}
 
 
 def top_contributors(tables: dict[str, DataFrame], k: int = 10) -> DataFrame:
@@ -287,14 +291,15 @@ def run_pipeline(spark: SparkSession, osm_path: str, out_dir: str):
     under `out_dir`. Returns (tables, docs, audits).
 
     The XML is parsed once per row tag: the node and way scans are
-    persisted (MEMORY_AND_DISK), and all eight outputs start at once as
-    concurrent jobs over them, at most `defaultParallelism` at a time:
-    the S5 line-delimited JSON documents write (the longest job) first,
-    then the two audit aggregations, then the five CSV table writes.
+    persisted (MEMORY_AND_DISK), and the eight outputs run as concurrent
+    jobs over them, one pool thread each, each submitted as soon as its
+    frame is built, in this order: the S5 JSON documents write (the
+    longest job; it runs while the rest are built and parses the node
+    scan), the two audits (each a chain of AQE jobs), a way-table write
+    (which parses the way scan), nodes_tags, the other table writes.
     Within one executor (local mode, as the package and its tests run),
-    the first task that reads a cached partition parses it and a
-    concurrent reader of that partition waits for the block and reads it
-    from the cache; on a multi-executor cluster, tasks on different
+    a task that reads a partition another task is caching waits for
+    that block; on a multi-executor cluster, tasks on different
     executors can each parse the same uncached partition. Each job runs
     in the caller's job group. Both scans are unpersisted before this
     returns or raises; when an output fails, the others still finish
@@ -307,38 +312,34 @@ def run_pipeline(spark: SparkSession, osm_path: str, out_dir: str):
     nodes = read_nodes(spark, osm_path)
     ways = read_ways(spark, osm_path)
     cleaned = tag_entries(F.col("tag"), clean=True)
-    tables = flatten(nodes, ways, cleaned)
     docs = shape_documents(nodes, cleaned)
-    raw_tags = explode_tags(nodes)
-    audits = {
-        "tag_keys": audit_tag_keys(raw_tags),
-        "street_types": audit_street_types(raw_tags),
-    }
-
-    def write_docs() -> None:
-        docs.write.mode("overwrite").json(os.path.join(out_dir, "json/documents"))
-
-    collects = [df.toArrow for df in audits.values()]
+    docs_dir = os.path.join(out_dir, "json/documents")
     scans = (nodes, ways)
     for scan in scans:
         scan.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
-            outputs = [write_docs, *collects, *_csv_writes(tables, out_dir)]
-            arrow = _run_concurrently(spark, pool, outputs)[1 : 1 + len(collects)]
+        # One thread per output: the documents, 5 tables and 2 audits.
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            # each call inherits the caller's job group and description
+            def submit(call: Callable) -> Future:
+                return pool.submit(inheritable_thread_target(spark)(call))
+
+            futures = {"documents": submit(lambda: docs.write.mode("overwrite").json(docs_dir))}
+            raw_tags = explode_tags(nodes)
+            audits = {
+                "tag_keys": audit_tag_keys(raw_tags),
+                "street_types": audit_street_types(raw_tags),
+            }
+            collects = [df.toArrow for df in audits.values()]
+            futures.update(zip(audits, map(submit, collects)))
+            tables = flatten(nodes, ways, cleaned)
+            writes = _csv_writes(tables, out_dir)
+            for name in ("ways_nodes", "nodes_tags"):
+                futures[name] = submit(writes.pop(name))
+            futures.update((name, submit(call)) for name, call in writes.items())
+            wait(futures.values())
+            results = {name: f.result() for name, f in futures.items()}
     finally:
         for scan in scans:
             scan.unpersist()
-    return tables, docs, {name: spark.createDataFrame(tbl) for name, tbl in zip(audits, arrow)}
-
-
-def _run_concurrently(
-    spark: SparkSession, pool: ThreadPoolExecutor, calls: list[Callable]
-) -> list:
-    """Run `calls` on `pool` and return their results in order. Each call
-    inherits the caller's local properties (job group, description,
-    scheduler pool), so its jobs are attributed like the caller's own.
-    Waits for every call before raising the first failure."""
-    futures = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
-    wait(futures)
-    return [f.result() for f in futures]
+    return tables, docs, {name: spark.createDataFrame(results[name]) for name in audits}

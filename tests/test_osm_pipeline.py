@@ -450,6 +450,15 @@ def test_documents_plan_has_no_exchange_join_or_explode(spark, extract):
         assert op not in plan, plan
 
 
+def test_street_type_audit_sorts_without_a_range_shuffle(spark, extract):
+    audit = P.audit_street_types(P.explode_tags(P.read_nodes(spark, extract[1])))
+    plan = audit._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan, plan
+    rows = [tuple(r) for r in audit.collect()]
+    assert len(rows) > 1
+    assert rows == sorted(rows, key=lambda r: (-r[1], r[0]))
+
+
 def test_demo_summary_does_not_parse_the_xml_again(spark, tmp_path):
     import os
 
