@@ -7,15 +7,14 @@ Runs every registered query tagged as a bench headline at
 "cpus": N, "defaultParallelism": N}``
 
 Methodology mirrors BASELINE.md (warm cache, best of N): each timed run
-REBUILDS the DataFrame from the query fn and collects it — re-collecting
-one DataFrame object lets Spark silently reuse shuffle stages across
-runs (measured: 35 s → 0.08 s on q10), which DuckDB's hot-cache numbers
-get no equivalent of. Rebuilding keeps plan construction + full
-execution inside every timing. First build+run is reported separately
-as ``cold_s`` (JVM/codegen warm-up) so nothing is hidden.
+REBUILDS the DataFrame from the query fn and collects it through
+``tools.query_loop.record`` (which also holds the session, the worker
+warm-up and the machine-load capture), so plan construction + full
+execution stay inside every timing. First build+run is reported
+separately as ``cold_s`` (JVM/codegen warm-up) so nothing is hidden.
 
-Input tables are persisted in Spark's in-memory columnar cache before
-timing (disable with ``DWOS_BENCH_CACHE_INPUTS=0``). This is the
+Input tables are always persisted in Spark's in-memory columnar cache
+before timing; ``cache_warm_s`` reports what that took. This is the
 honest counterpart of DuckDB's hot-cache buffer pool — the baseline
 keeps decoded pages resident across its 3 runs — and it undoes a
 fixture artifact: the sf0.1 parquet files are written as a SINGLE row
@@ -37,10 +36,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_wrangling_openstreetmap_spark import io as dwos_io
 from data_wrangling_openstreetmap_spark.registry import REGISTRY, _ensure_loaded
-from data_wrangling_openstreetmap_spark.session import get_spark
+from tools import query_loop
 
 # Queries benchmarked against the DuckDB numbers in BASELINE.md. Grows as
-# operators land; any registered query can be timed via DWOS_BENCH_ALL=1.
+# operators land; `python -m tools.query_loop sweep` times the registry.
 HEADLINE = [
     "q1_pricing_summary",
     "q2_join_chain",
@@ -66,19 +65,48 @@ HEADLINE = [
 # makes the minimum robust to multi-second load bursts.
 RUNS = int(os.environ.get("DWOS_BENCH_RUNS", "9"))
 
+# Cached partitions per table follow rows-per-task, not core count:
+# ~10⁵ rows/task keeps every stage one wave while minimizing task
+# launches, the dominant cost at sub-GB scale. Measured sweep on the
+# 600 k-row lineitem: 16 partitions (~4·10⁴ rows/task) beats both 8
+# (scan-bound: q1 0.38→0.26 s) and 32 (task-dispatch-bound: total 1.95
+# vs 1.67 s); the 10⁴–10⁵-row tables stay at 8 where dispatch
+# dominates. embeddings stays wider — q10's Arrow-batched matmul wants
+# the parallelism. This is the bench-local image of the 128 MB-per-
+# partition sizing rule a 100 TB run uses.
+CACHE_PARTITIONS = {"lineitem": 16, "orders": 8, "events": 8, "documents": 8, "embeddings": 16}
+
+
+def _cache_inputs(spark, sf_dir: str) -> float:
+    """Persist each table's scan (see module docstring) and swap it into
+    the scan-plan cache, so every query construction picks the cached
+    relation up. Returns the seconds it took."""
+    t0 = time.perf_counter()
+    for t in dwos_io.TABLES:
+        cached = dwos_io.load_table(spark, sf_dir, t).repartition(CACHE_PARTITIONS.get(t, 4)).persist()
+        cached.count()
+        dwos_io._scan_cache[(spark, sf_dir.rstrip("/"), t)] = cached
+    return round(time.perf_counter() - t0, 4)
+
+
+def _run_s(spark, name: str, sf_dir: str) -> float:
+    """Seconds one fresh build + collect of ``name`` took."""
+    rec = query_loop.record(spark, name, sf_dir)[0]
+    if rec["err"]:
+        raise RuntimeError(f"{name}: {rec['err']}")
+    return round(rec["build_s"] + rec["plan_s"] + rec["collect_s"], 4)
+
 
 def main() -> None:
     _ensure_loaded()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     # 8 shuffle partitions (SURVEY §4.2): at sf0.1 every exchange carries
     # well under 100 MB, so the sub-second headline queries are
     # stage-scheduling-bound — 32 partitions quadruples task count for
     # zero parallelism win (measured round 1: q5/q7/q8 dominated by task
     # dispatch). A 100 TB run sizes this to ~128 MB post-shuffle
     # partitions instead.
-    spark = get_spark(app_name="dwos-bench", cpus=cpus, shuffle_partitions=8)
+    spark = query_loop.start(shuffle_partitions=8)
     # AQE off for the bench session only (tests and the production
     # posture keep it on): AQE materializes every exchange as a separate
     # query stage, and at this scale that barrier costs a measured
@@ -89,68 +117,11 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     names = [n for n in HEADLINE if n in REGISTRY]
-    if os.environ.get("DWOS_BENCH_ALL"):
-        names = sorted(REGISTRY)
-
-    # Hot-cache inputs (see module docstring): persist each table's
-    # scan, facts repartitioned so cached partitions parallelize past
-    # the fixture's single-row-group files. Swapped into the scan-plan
-    # cache so every query construction picks the cached relation up.
-    cache_warm_s = None
-    if os.environ.get("DWOS_BENCH_CACHE_INPUTS", "1") != "0":
-        t0 = time.perf_counter()
-        sfk = sf_dir.rstrip("/")
-        # Partition counts follow rows-per-task, not core count: ~10⁵
-        # rows/task keeps every stage one wave while minimizing task
-        # launches, the dominant cost at sub-GB scale. Measured sweep on
-        # the 600 k-row lineitem: 16 partitions (~4·10⁴ rows/task) beats
-        # both 8 (scan-bound: q1 0.38→0.26 s) and 32 (task-dispatch-
-        # bound: total 1.95 vs 1.67 s); the 10⁴–10⁵-row tables stay at
-        # 8 where dispatch dominates. embeddings stays wider — q10's
-        # Arrow-batched matmul wants the parallelism. This is the
-        # bench-local image of the 128 MB-per-partition sizing rule a
-        # 100 TB run uses.
-        parts = {
-            "lineitem": 16,
-            "orders": 8,
-            "events": 8,
-            "documents": 8,
-            "embeddings": 16,
-        }
-        for t in dwos_io.TABLES:
-            df = dwos_io.load_table(spark, sf_dir, t)
-            cached = df.repartition(parts.get(t, 4)).persist()
-            cached.count()
-            dwos_io._scan_cache[(spark, sfk, t)] = cached
-        cache_warm_s = round(time.perf_counter() - t0, 4)
-
-    # Warm-up: JVM, parquet footers, codegen paths, AND the Python
-    # worker pool (first Arrow-batched stage pays ~2 s of interpreter
-    # startup that says nothing about the operators).
+    cache_warm_s = _cache_inputs(spark, sf_dir)
+    # Warm-up: JVM, parquet footers and codegen paths.
     if names:
-        REGISTRY[names[0]].fn(spark, sf_dir).collect()
-    spark.range(32).mapInPandas(
-        lambda it: it, "id long"
-    ).collect()
-
-    # Machine-load context (VERDICT r4 next-round #4): the same commit
-    # has measured 1.36–1.87 s across sessions purely from external
-    # load. Record /proc/loadavg plus a fixed reference micro-op — one
-    # JVM-only agg over a generated range, best of 5 — so a reader can
-    # normalize cross-round swings instead of re-litigating them: if
-    # ref_microop_s moved by the same factor as the totals, it's the
-    # machine, not the plans.
-    try:
-        with open("/proc/loadavg") as fh:
-            loadavg = [float(x) for x in fh.read().split()[:3]]
-    except OSError:
-        loadavg = None
-    ref_best = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        spark.range(1_000_000).selectExpr("sum(id * 3 + 1)").collect()
-        ref_best = min(ref_best, time.perf_counter() - t0)
-    ref_microop_s = round(ref_best, 4)
+        _run_s(spark, names[0], sf_dir)
+    ctx = query_loop.machine(spark)
 
     # Per-run series (VERDICT r6 §Next #3): the r6 graded artifact showed
     # +17% vs the builder's same-commit run with no plan change; a
@@ -162,23 +133,10 @@ def main() -> None:
     cold: dict[str, float] = {}
     per_run: dict[str, list[float]] = {}
     for name in names:
-        spec = REGISTRY[name]
-        t0 = time.perf_counter()
-        spec.fn(spark, sf_dir).collect()
-        cold[name] = round(time.perf_counter() - t0, 4)
-        runs: list[float] = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).collect()
-            runs.append(round(time.perf_counter() - t0, 4))
-        per_run[name] = runs
-        timings[name] = min(runs)
-
-    try:
-        with open("/proc/loadavg") as fh:
-            loadavg_after = [float(x) for x in fh.read().split()[:3]]
-    except OSError:
-        loadavg_after = None
+        runs = [_run_s(spark, name, sf_dir) for _ in range(RUNS + 1)]
+        cold[name], per_run[name] = runs[0], runs[1:]
+        timings[name] = min(per_run[name])
+    loadavg_after = query_loop.loadavg()
 
     total = round(sum(timings.values()), 4)
     # Self-interpreting noise normalization (VERDICT r9 §Next #5): the
@@ -186,9 +144,12 @@ def main() -> None:
     # 0.061 r8 → 0.083–0.120 r9 on IDLE loadavg), so the raw total
     # alone reads as a regression when only the VM slowed.
     # normalized_total = value / ref_microop_s is dimensionless and
-    # machine-speed-invariant; the r8–r9 band for THIS query set is
-    # ~21–30. A normalized_total inside the band with a shifted raw
-    # total is environmental by construction — no notes archaeology.
+    # machine-speed-invariant, but not core-count-invariant: the
+    # single-threaded micro-op does not scale with cores while the
+    # queries do. The r8–r9 band for THIS query set, ~21–30, was
+    # measured on 32 cores; on 4 cores the same code read 54.6. Inside
+    # the band for its core count, a shifted raw total is environmental.
+    ref_microop_s = ctx["ref_microop_s"]
     normalized_total = (
         round(total / ref_microop_s, 2) if ref_microop_s > 0 else None
     )
@@ -202,15 +163,13 @@ def main() -> None:
                 "cold_s": cold,
                 "per_run_s": per_run,
                 "cache_warm_s": cache_warm_s,
-                "loadavg": loadavg,
+                "loadavg": ctx["loadavg"],
                 "loadavg_after": loadavg_after,
                 "ref_microop_s": ref_microop_s,
                 "normalized_total": normalized_total,
-                "sf": sf,
-                # the local[N] the session ran on and what Spark made of
-                # it, so a reader can check the core count was honoured
-                "cpus": int(cpus) if cpus.isdigit() else cpus,
-                "defaultParallelism": spark.sparkContext.defaultParallelism,
+                "sf": query_loop.scale(sf_dir),
+                "cpus": ctx["cpus"],
+                "defaultParallelism": ctx["defaultParallelism"],
             }
         )
     )

@@ -112,7 +112,7 @@ def ntz_epoch_us(col: Column | str) -> Column:
     operands straddle a DST transition, and absolute values (hour
     buckets in output) shift wholesale — the st14 class, caught by the
     round-12 full-registry TZ-hostile probe (``TZ=America/New_York
-    python -m tools.hostile_probe hostile full``). ``timestampdiff``
+    python -m tools.query_loop probe hostile full``). ``timestampdiff``
     over two ntz operands is pure wall-clock arithmetic, no session
     interpretation anywhere."""
     return F.timestamp_diff(

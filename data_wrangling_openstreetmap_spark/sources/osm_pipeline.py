@@ -8,8 +8,8 @@ lifecycle re-expressed declaratively:
 
 - S2  ingest: Spark native XML source (`rowTag` node/way), explicit
   schemas (inference can demote single-element arrays to structs).
-  At 100 TB: the same reader over a split planet extract — XML row
-  boundaries are per-element, so input splits parallelize cleanly.
+  Spark's XML reader parses one file in one task, whatever its size;
+  only a directory of files (a pre-split extract) scans in parallel.
 - P3  audit: regex triage of tag keys (lower / lower_colon /
   problemchars / other) as one `when` chain — a single projection.
 - P4/P5 clean: `tag_entries` types and cleans one tag struct as a

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from data_wrangling_openstreetmap_spark.sources.osm_gen import generate_osm_xml
 from data_wrangling_openstreetmap_spark.sources import osm_pipeline as P
+from tools.query_loop import job_group, stage_attempts
 
 SF = "/root/testdata/sf0.001"
 
@@ -121,64 +122,6 @@ def _persisted(sc) -> set[int]:
     return set(sc._jsc.getPersistentRDDs().keySet())
 
 
-def _last_job_id(sc) -> int:
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc._jsc.sc().statusStore().jobsList(None)
-    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
-
-
-def _jobs_since(spark, last_job: int) -> list:
-    """Status-store job data of every job submitted after ``last_job``,
-    leaving out those of streaming queries still running in the session
-    (their job group is the query's run id)."""
-    sc = spark.sparkContext
-    streams = {str(q.runId) for q in spark.streams.active}
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc._jsc.sc().statusStore().jobsList(None)
-    return [
-        j
-        for j in (jobs.apply(i) for i in range(jobs.size()))
-        if j.jobId() > last_job
-        and not (j.jobGroup().isDefined() and j.jobGroup().get() in streams)
-    ]
-
-
-def _stage_attempts(spark, jobs: list) -> list:
-    """Status-store data of the last attempt of every stage of ``jobs``
-    that ran. Past ``spark.ui.retainedStages`` the store evicts SKIPPED
-    stages first, whatever their age, so a job that has just run can
-    list a skipped stage the store no longer holds; such a stage ran no
-    task. Every other stage of ``jobs`` must still be there."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    out = []
-    for j in jobs:
-        sids = j.stageIds()
-        missing = 0
-        for i in range(sids.size()):
-            try:
-                out.append(store.lastStageAttempt(sids.apply(i)))
-            except Py4JJavaError as e:
-                if "NoSuchElementException" not in str(e.java_exception):
-                    raise
-                missing += 1
-        assert missing <= j.numSkippedStages()
-    return out
-
-
-def _in_group(spark, group: str, fn):
-    """Run ``fn()`` with the caller's job group set to ``group``; return
-    its result and the status-store data of the jobs it fired."""
-    sc = spark.sparkContext
-    last = _last_job_id(sc)
-    sc.setJobGroup(group, "osm pipeline test")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, _jobs_since(spark, last)
-
-
 @pytest.fixture(scope="module")
 def extract(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("osm_fanout")
@@ -189,9 +132,8 @@ def test_pipeline_parses_each_row_tag_once(spark, extract):
     import os
 
     d, path = extract
-    _, jobs = _in_group(
-        spark, "osm-fanout", lambda: P.run_pipeline(spark, path, str(d / "once"))
-    )
+    with job_group(spark, "osm-fanout") as jobs:
+        P.run_pipeline(spark, path, str(d / "once"))
     assert jobs
     # every job, including those submitted from the worker threads,
     # carries the caller's job group
@@ -200,7 +142,7 @@ def test_pipeline_parses_each_row_tag_once(spark, extract):
     size = os.path.getsize(path)
     scans = {
         sd.stageId()
-        for sd in _stage_attempts(spark, jobs)
+        for sd in stage_attempts(spark, jobs)
         if sd.status().toString() == "COMPLETE" and sd.inputBytes() == size
     }
     assert 1 <= len(scans) <= 2
@@ -234,9 +176,8 @@ def test_pipeline_failed_write_raises_after_other_outputs(spark, extract):
 def test_audits_are_local_and_match_raw_aggregations(spark, extract):
     d, path = extract
     _, _, audits = P.run_pipeline(spark, path, str(d / "audits"))
-    got, jobs = _in_group(
-        spark, "osm-audits", lambda: {k: [tuple(r) for r in df.collect()] for k, df in audits.items()}
-    )
+    with job_group(spark, "osm-audits") as jobs:
+        got = {k: [tuple(r) for r in df.collect()] for k, df in audits.items()}
     assert jobs == []
     raw_tags = P.explode_tags(P.read_nodes(spark, path))
     want = {
@@ -467,9 +408,10 @@ def test_demo_summary_does_not_parse_the_xml_again(spark, tmp_path):
     # the demo's extract: the same generator call on the same tables
     size = os.path.getsize(generate_osm_xml(spark, SF, str(tmp_path), max_nodes=300))
     summary = osm_wrangle_demo(spark, SF)
-    rows, jobs = _in_group(spark, "osm-demo-collect", summary.collect)
+    with job_group(spark, "osm-demo-collect") as jobs:
+        rows = summary.collect()
     assert {r.metric for r in rows} >= {"rows_nodes", "rows_documents", "tagkeys_lower"}
-    inputs = [sd.inputBytes() for sd in _stage_attempts(spark, jobs)]
+    inputs = [sd.inputBytes() for sd in stage_attempts(spark, jobs)]
     assert any(b > 0 for b in inputs)  # it reads the sinks
     assert size not in inputs
 

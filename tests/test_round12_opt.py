@@ -24,6 +24,7 @@ from data_wrangling_openstreetmap_spark.io import load_table
 from data_wrangling_openstreetmap_spark.operators import llm
 from data_wrangling_openstreetmap_spark.operators.llm import _vectorized_topk
 from data_wrangling_openstreetmap_spark.plans import sql_ext
+from tools.query_loop import job_group
 
 
 def _docs(spark, texts):
@@ -182,15 +183,8 @@ def test_dense_build_fires_at_most_two_jobs(spark, sf_dir, monkeypatch, caller):
     # first, since its schema read is a job shared per session
     monkeypatch.delenv("DWOS_FULL_PLAN", raising=False)
     load_table(spark, sf_dir, "documents")
-    sc = spark.sparkContext
-    group = f"test-token-set-build-{caller}"
-    sc.setJobGroup(group, f"{caller} build")
-    try:
+    with job_group(spark, f"test-token-set-build-{caller}") as jobs:
         _PAIR_CALLERS[caller](spark, sf_dir)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
     assert len(jobs) <= 2, f"{caller} build fired {len(jobs)} Spark jobs"
     # the masks are a per-row projection of the scan: no aggregate below
     # the pair scan, even with checkpoints neutralized

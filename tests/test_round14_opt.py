@@ -25,6 +25,7 @@ from data_wrangling_openstreetmap_spark.operators.llm import (
     _train_quantizer,
     l3_ann_ivf,
 )
+from tools.query_loop import job_group
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_BUILD = "/root/testdata/sf0.01"
@@ -82,15 +83,8 @@ def test_ivf_build_fires_one_job(spark):
     # the table scan is resolved first (its schema read is a job of its
     # own, shared by every query over the table and cached per session)
     load_table(spark, SF_BUILD, "embeddings")
-    sc = spark.sparkContext
-    group = "test-ivf-build-jobs"
-    sc.setJobGroup(group, "l3_ann_ivf build")
-    try:
+    with job_group(spark, "test-ivf-build-jobs") as jobs:
         l3_ann_ivf(spark, SF_BUILD)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
     assert len(jobs) == 1, f"l3_ann_ivf build fired {len(jobs)} Spark jobs"
 
 
