@@ -28,7 +28,7 @@ better.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Observation
 from pyspark.sql import functions as F
 
 # Lossless decimal image of a 2-decimal double (running-sum windows).
@@ -488,8 +488,9 @@ def ckpt(df):
     otherwise a bad construct in a checkpointed prefix would pass
     vacuously, the lineage-truncation twin of the formatted-plan
     blindness gotcha. Only use this wrapper for single-shot prefix
-    truncation; ITERATIVE loop checkpoints (g1/g3/g9/l2_dup_clusters)
-    must stay unconditional — without them plan analysis itself OOMs.
+    truncation; the checkpoints of ITERATIVE loops (``fixpoint``) and
+    of g1's edge list must stay unconditional — without them plan
+    analysis itself OOMs.
 
     Storage: DISK_ONLY. The truncated relation is read a handful of
     times; a local-disk read of an O(keys) table is negligible, while
@@ -531,16 +532,16 @@ CKPT_RESULTS: list | None = None
 
 
 def iter_ckpt(df):
-    """Unconditional ``localCheckpoint(eager=True)`` for ITERATIVE
-    fixpoint loops (g1/g3/g9/l2_dup_clusters): each round's plan must
-    be truncated even under ``DWOS_FULL_PLAN=1`` — without truncation
-    the final plan embeds every round's joins (~810 exchange nodes at
-    convergence, VERDICT r4) and plan ANALYSIS itself OOMs. Unlike
-    ``ckpt`` there is no env escape hatch; instead the pre-checkpoint
-    frame is appended to ``PRECKPT_CAPTURE`` when a sweep installs one,
-    so every truncated round-plan is still walked by the order
-    checkers. Operators must use this wrapper (or ``ckpt``) rather
-    than calling ``DataFrame.localCheckpoint`` directly —
+    """Unconditional ``localCheckpoint(eager=True)`` for each round of
+    a ``fixpoint`` loop and for g1's edge list, which feeds its unrolled
+    rank loop: the plan must be truncated even under ``DWOS_FULL_PLAN=1``
+    — without truncation the final plan embeds every round's joins
+    (~810 exchange nodes at convergence, VERDICT r4) and plan ANALYSIS
+    itself OOMs. Unlike ``ckpt`` there is no env escape hatch; instead
+    the pre-checkpoint frame is appended to ``PRECKPT_CAPTURE`` when a
+    sweep installs one, so every truncated round-plan is still walked by
+    the order checkers. Operators must use this wrapper (or ``ckpt``)
+    rather than calling ``DataFrame.localCheckpoint`` directly —
     tests/test_plan_shapes.py::test_no_direct_local_checkpoint scans
     package source to enforce it, which is what makes "every LogicalRDD
     leaf is either a walked capture or a bounded createDataFrame
@@ -556,6 +557,29 @@ def iter_ckpt(df):
     if CKPT_RESULTS is not None:
         CKPT_RESULTS.append(out)
     return out
+
+
+def fixpoint(init, step, metric, max_rounds):
+    """Apply ``step`` from ``init`` until a round leaves the aggregate
+    ``metric`` as it was (NULL equals NULL), or ``max_rounds`` times;
+    return the last round. Each round, ``init`` too, goes through
+    ``iter_ckpt`` with ``metric`` observed on it, so the eager
+    checkpoint job computes the metric: no separate count job. The
+    metric must only repeat once the frame stops changing, e.g. the
+    row count of a frame that only grows or only shrinks."""
+
+    def observed(df):
+        obs = Observation()
+        out = iter_ckpt(df.observe(obs, metric.alias("metric")))
+        return out, obs.get["metric"]
+
+    cur, last = observed(init)
+    for _ in range(max_rounds):
+        cur, now = observed(step(cur))
+        if now == last:
+            break
+        last = now
+    return cur
 
 
 def spread(df):

@@ -29,7 +29,7 @@ from ..functions import text as T
 from ..functions import vectors as V
 from ..io import load_table
 from ..registry import register
-from ._helpers import ckpt, iter_ckpt, spread
+from ._helpers import ckpt, fixpoint, iter_ckpt, spread
 
 # DuckDB expression for the same token array Spark's T.tokens() builds.
 _ORACLE_TOKS = r"list_filter(string_split_regex(text, '\s+'), x -> x != '')"
@@ -1114,7 +1114,10 @@ def _semdedup_dropped_frame(ids, E, N, threshold):
     """Ids dropped within one SemDeDup cell: vec y is dropped iff some
     x with x.vec_id < y.vec_id has rounded cosine ≥ threshold (l2_semdedup
     kernel core). Output already distinct per group, and cells partition
-    the vectors, so no cross-group dedup is needed."""
+    the vectors, so no cross-group dedup is needed. Only single-tile
+    groups (every fixture group) are bit-identical to the untiled
+    kernel: on a multi-tile gemm the ``S >= threshold`` drop can flip
+    for a score within half an ulp of a rounding boundary."""
     import numpy as np
     import pandas as pd
 
@@ -1917,51 +1920,41 @@ def l2_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: edges come from the LSH/MinHash candidate stage, labels
     localCheckpoint per round to cut lineage, and the large-star/
     small-star variant bounds rounds to O(log n). The convergence
-    check is one count per round, not a collect of the labels.
+    test is the sum of a round's labels, observed on its checkpoint
+    job (``_helpers.fixpoint``): no count job and no collect.
     """
     pairs = l2_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     # Edges are persisted so the 7-shuffle candidate pipeline runs once,
-    # not once per round; labels localCheckpoint per round (the g3
-    # pattern below) so the returned plan is a scan of the final
-    # checkpointed round — without it the plan embeds every round's
-    # joins (~810 exchange nodes by convergence at sf0.001, VERDICT r4)
-    # and Catalyst pays the tree walk even though the data is cached.
+    # not once per round; fixpoint checkpoints every round, so the
+    # returned plan is a scan of the last one (VERDICT r4).
     edges = edges.persist()
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .transform(iter_ckpt)
-    )
+
+    def propagate(labels):
+        nbr_min = (
+            edges.join(labels, edges.dst == labels.doc_id)
+            .groupBy("src")
+            .agg(F.min("label").alias("nbr_min"))
+        )
+        least = F.least(F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label")))
+        return labels.join(nbr_min, labels.doc_id == nbr_min.src, "left").select(
+            "doc_id", least.alias("label")
+        )
+
     try:
-        for _ in range(20):  # ≥ any realistic dup-cluster diameter
-            nbr_min = (
-                edges.join(labels, edges.dst == labels.doc_id)
-                .groupBy("src")
-                .agg(F.min("label").alias("nbr_min"))
-            )
-            new_labels = (
-                labels.join(nbr_min, labels.doc_id == nbr_min.src, "left")
-                .select(
-                    "doc_id",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                    ).alias("label"),
-                )
-                .transform(iter_ckpt)
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "doc_id")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
+        # Every round keeps the same doc_ids and a label only ever falls
+        # (least), so the label sum is unchanged exactly when no label
+        # moved. Labels are longs (< 10^19 in magnitude), so a decimal(38,0)
+        # sum of fewer than 10^19 of them cannot overflow.
+        docs = edges.select(F.col("src").alias("doc_id")).distinct()
+        labels = fixpoint(
+            docs.withColumn("label", F.col("doc_id")),
+            propagate,
+            F.sum(F.col("label").cast("decimal(38,0)")),
+            20,  # ≥ any realistic dup-cluster diameter
+        )
         return labels.select(
             "doc_id",
             F.col("label").alias("cluster_id"),
@@ -6788,8 +6781,8 @@ def g3_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iterative DataFrame frontier: each round joins current
     distances to the edge list, takes the element-wise min, and stops
     when a round adds/changes nothing — Pregel-as-DataFrames, the same
-    loop discipline as l2_dup_clusters (persist per round, convergence
-    via count, unpersist behind).
+    loop discipline as l2_dup_clusters (``_helpers.fixpoint``: a
+    checkpoint per round, whose job also counts the reached nodes).
 
     Scale: each round is one shuffle join on node id + one min-agg;
     rounds ≤ graph diameter (capped). At 100 TB the frontier join
@@ -6807,26 +6800,19 @@ def g3_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ud = ud.persist()
     src = e.agg(F.min("u").alias("node")).select("node", F.lit(0).alias("hops"))
-    # localCheckpoint per round truncates the loop's logical lineage —
-    # without it the plan tree doubles every iteration (union-of-join of
-    # the previous round) and plan analysis itself OOMs by round ~8.
-    dist = src.transform(iter_ckpt)
-    n_prev = dist.count()
-    for _ in range(_G3_MAX_HOPS):
-        grown = (
+
+    def grow(dist):
+        return (
             dist.join(ud, dist.node == ud.s)
             .select(F.col("d").alias("node"), (F.col("hops") + 1).alias("hops"))
             .unionByName(dist.select("node", "hops"))
             .groupBy("node")
             .agg(F.min("hops").alias("hops"))
-        ).transform(iter_ckpt)
-        n_now = grown.count()
-        dist = grown
-        if n_now == n_prev:
-            # No new node reached; min-hops of reached nodes are final
-            # (BFS layers only ever add nodes, never improve old ones).
-            break
-        n_prev = n_now
+        )
+
+    # A round that reaches no new node is final: BFS layers only ever
+    # add nodes, never improve the hops of reached ones.
+    dist = fixpoint(src, grow, F.count("*"), _G3_MAX_HOPS)
     out = dist.groupBy("hops").agg(F.count("*").alias("n_nodes")).select(
         F.col("hops").cast("long").alias("hops"), "n_nodes"
     )
@@ -7814,16 +7800,15 @@ def g9_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is one degree aggregation plus two semi-joins on
     single int keys — the keep-set carries only node ids, never
-    payloads. Per-round ``localCheckpoint`` truncates the loop lineage
-    (the l2_dup_clusters discipline, VERDICT r4), so the returned plan
+    payloads. ``_helpers.fixpoint`` checkpoints each round and counts
+    its edges on that checkpoint job (VERDICT r4), so the returned plan
     is a scan of the final round, not {r} unrolled join trees; the
     sweep's exchange-count cap enforces it. At 100 TB the edge list
     comes from the LSH candidate stage and rounds bound by core depth,
     typically ≪ diameter.
     """.format(k=_G9_K, r=_G9_ROUNDS)
-    cur = co_purchase_edges(spark, sf_dir, 2).select("u", "v").transform(iter_ckpt)
-    prev_cnt = cur.count()
-    for _ in range(_G9_ROUNDS):
+
+    def peel(cur):
         deg = (
             cur.select(F.col("u").alias("node"))
             .unionByName(cur.select(F.col("v").alias("node")))
@@ -7831,17 +7816,14 @@ def g9_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("d"))
         )
         keep = deg.filter(F.col("d") >= _G9_K).select("node")
-        nxt = (
+        return (
             cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .transform(iter_ckpt)
         )
-        cnt = nxt.count()
-        cur = nxt
-        if cnt == prev_cnt:
-            break
-        prev_cnt = cnt
+
+    edges = co_purchase_edges(spark, sf_dir, 2).select("u", "v")
+    cur = fixpoint(edges, peel, F.count("*"), _G9_ROUNDS)
     return (
         cur.select(F.col("u").alias("node"))
         .unionByName(cur.select(F.col("v").alias("node")))

@@ -31,7 +31,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -85,17 +85,31 @@ def stage_replay_dir(
     `(ts, event_id)` order of the window that numbers them; no separate
     sort runs.
     """
+    return _stage_chunks(spark, sf_dir, out_dir, n_chunks, sentinel_hours)
+
+
+def _stage_chunks(spark, sf_dir, out_dir, n_chunks, sentinel_hours, jitter_secs=None):
+    """Both stagers: number the events by ``(key, event_id)``, where
+    ``key`` is ``ts`` or, given ``jitter_secs``, the arrival time, write
+    the ``n_chunks`` runs of that order and the optional sentinel."""
     events = load_table(spark, sf_dir, "events")
-    rows = events.count()
+    staged, key = events, "ts"
+    if jitter_secs is not None:
+        jitter = (F.col("event_id") * F.lit(2654435761)) % int(jitter_secs)
+        key = "_arrival"
+        staged = events.withColumn(
+            key, F.col("ts") + F.make_dt_interval(secs=jitter.cast("double"))
+        )
+    rows = staged.count()
     per = (rows + n_chunks - 1) // n_chunks
-    ranked = events.withColumn(
-        "chunk", ((F.row_number().over(_time_order()) - 1) / per).cast("int")
-    )
+    number = F.row_number().over(Window.orderBy(key, "event_id"))
+    ranked = staged.withColumn("chunk", ((number - 1) / per).cast("int"))
     chunks = [
-        ranked.filter(F.col("chunk") == c).drop("chunk") for c in range(n_chunks)
+        ranked.filter(F.col("chunk") == c).select(*events.columns)
+        for c in range(n_chunks)
     ]
     if sentinel_hours is not None:
-        chunks.append(_sentinel_chunk(events, "ts", sentinel_hours))
+        chunks.append(_sentinel_chunk(staged, key, sentinel_hours))
     write_ordered_chunks(chunks, out_dir)
     return out_dir
 
@@ -112,12 +126,6 @@ def _sentinel_chunk(frame: DataFrame, ts_col: str, hours: int) -> DataFrame:
         F.lit(0.0).alias("value"),
         F.lit("{}").alias("props"),
     )
-
-
-def _time_order():
-    from pyspark.sql import Window
-
-    return Window.orderBy("ts", "event_id")
 
 
 def read_event_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
@@ -194,24 +202,4 @@ def stage_jittered_replay_dir(
     is arrival-order independent as long as the watermark horizon
     exceeds the disorder bound.
     """
-    events = load_table(spark, sf_dir, "events")
-    jitter = (F.col("event_id") * F.lit(2654435761)) % int(jitter_secs)
-    staged = events.withColumn(
-        "_arrival", F.col("ts") + F.make_dt_interval(secs=jitter.cast("double"))
-    )
-    rows = staged.count()
-    per = (rows + n_chunks - 1) // n_chunks
-    from pyspark.sql import Window
-
-    w = Window.orderBy("_arrival", "event_id")
-    ranked = staged.withColumn(
-        "chunk", ((F.row_number().over(w) - 1) / per).cast("int")
-    )
-    chunks = [
-        ranked.filter(F.col("chunk") == c).select(*events.columns)
-        for c in range(n_chunks)
-    ]
-    if sentinel_hours is not None:
-        chunks.append(_sentinel_chunk(staged, "_arrival", sentinel_hours))
-    write_ordered_chunks(chunks, out_dir)
-    return out_dir
+    return _stage_chunks(spark, sf_dir, out_dir, n_chunks, sentinel_hours, jitter_secs)

@@ -9,11 +9,13 @@ from tools.query_loop import record
 
 def test_record_charges_each_build_only_its_own_jobs(spark, sf_dir, monkeypatch):
     monkeypatch.delenv("DWOS_FULL_PLAN", raising=False)
-    # l2_dup_clusters' build fires one job per label-propagation round;
-    # l2_jaccard_pairs' fires at most two (test_round12_opt)
+    # l2_dup_clusters' build fires each label-propagation round's
+    # checkpoint jobs; l2_jaccard_pairs' fires at most two (test_round12_opt)
     recs = [record(spark, name, sf_dir)[0] for name in ("l2_dup_clusters", "l2_jaccard_pairs")]
     for rec in recs:
         assert rec["err"] is None, rec
         assert rec["rows"] == len(REGISTRY[rec["name"]].fn(spark, sf_dir).collect())
+        # the collect's Spark jobs run inside the action that collect_s times
+        assert 0 <= rec["exec_s"] <= rec["collect_s"], rec
     assert recs[0]["build_jobs"] > 2
     assert recs[1]["build_jobs"] <= 2, recs[1]

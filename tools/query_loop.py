@@ -215,6 +215,14 @@ def _stage_totals(spark, jobs: list) -> dict:
     return {"stages": len(stages), **out, "task_max_ms": int(top), "task_median_ms": int(med)}
 
 
+def _span_s(jobs: list) -> float:
+    """Seconds from the first submission to the last completion of
+    ``jobs``, by the scheduler's clock; 0 when no job ran."""
+    starts = [j.submissionTime().get().getTime() for j in jobs if j.submissionTime().isDefined()]
+    ends = [j.completionTime().get().getTime() for j in jobs if j.completionTime().isDefined()]
+    return (max(ends) - min(starts)) / 1000 if starts and ends else 0.0
+
+
 def record(spark, name: str, sf_dir: str, action=lambda df: df.collect()):
     """Build registered query ``name`` fresh at ``sf_dir`` and run
     ``action`` on the frame, each phase under a job group named
@@ -225,6 +233,8 @@ def record(spark, name: str, sf_dir: str, action=lambda df: df.collect()):
     Spark silently reuse its shuffle stages (measured: 35 s → 0.08 s on
     q10). ``plan_s`` is Catalyst's optimization and physical planning,
     forced before the action, which then runs the planned query.
+    ``collect_s`` is the action; ``exec_s`` the span of its Spark jobs,
+    so ``collect_s - exec_s`` is the result's transfer into Python.
 
     Returns ``(rec, df, out)``: a JSON-able record, the built frame and
     the action's result. If the build or the action raised, ``rec["err"]``
@@ -238,6 +248,7 @@ def record(spark, name: str, sf_dir: str, action=lambda df: df.collect()):
         "build_s": None,
         "plan_s": None,
         "collect_s": None,
+        "exec_s": None,
         "build_jobs": None,
         "collect_jobs": None,
         "rows": None,
@@ -260,6 +271,7 @@ def record(spark, name: str, sf_dir: str, action=lambda df: df.collect()):
             build_s=round(t1 - t0, 4),
             plan_s=round(t3 - t2, 4),
             collect_s=round(t4 - t3, 4),
+            exec_s=round(_span_s(collect), 4),
             build_jobs=len(build),
             collect_jobs=len(collect),
             rows=len(out),
@@ -278,7 +290,7 @@ def _sweep(spark, args) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     ctx = machine(spark)
     names = args.names or sorted(REGISTRY)
-    keys = ("build_s", "plan_s", "collect_s", "build_jobs", "collect_jobs", "store_s")
+    keys = ("build_s", "plan_s", "collect_s", "exec_s", "build_jobs", "collect_jobs", "store_s")
     totals = dict.fromkeys(keys, 0)
     errors = 0
     t0 = time.perf_counter()
