@@ -24,6 +24,18 @@ or not it holds data. ``run_to_memory`` starts its query with
 ``min(shuffle.partitions, defaultParallelism)`` state partitions and
 restores the session conf right after ``start()``; the query's cloned
 session keeps the smaller value.
+
+Checkpoints are written through Hadoop's ``FileSystem`` API. Spark's
+default checkpoint manager uses ``FileContext``, and without the native
+libhadoop, Hadoop's local filesystem answers each ``FileContext``
+file-status lookup by forking a ``readlink`` process: 280 of the 362
+processes a perfbench ``wrangle_ingest`` drain forked.
+``run_to_memory`` starts its query with
+``FileSystemBasedCheckpointFileManager``, scoped like the
+state-partition conf, which leaves only the 82 ``chmod`` forks. The
+memory sink checkpoints into a fresh per-query local temp dir, where
+``FileSystem.rename`` is an atomic POSIX ``rename(2)`` and no second
+writer exists, so the manager's exists-then-rename is safe there.
 """
 
 from __future__ import annotations
@@ -43,6 +55,12 @@ EVENTS_SCHEMA = (
 )
 SENTINEL_USER = -1
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_CHECKPOINT_LOCATION = "spark.sql.streaming.checkpointLocation"
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def write_ordered_chunks(dfs, out_dir: str) -> None:
@@ -152,11 +170,28 @@ def run_to_memory(
     defaultParallelism)`` state partitions. Streams get no AQE
     coalescing, so a static conf sized for batch (32 here) would
     become 32 state-store tasks per stateful operator per micro-batch
-    however little data they hold. The conf is set on the stream's
-    session only around ``start()``, which clones the session: the
-    running query keeps the smaller value and the caller's conf reads
-    the same afterwards, also when ``start()`` raises. Changing the
-    same session's conf from another thread meanwhile is unsupported.
+    however little data they hold.
+
+    The checkpoint is written through ``FileSystemBasedCheckpointFileManager``
+    instead of Spark's default ``FileContext`` manager: without libhadoop,
+    Hadoop's local filesystem forks a ``readlink`` process for every
+    ``FileContext`` file-status lookup (and a ``chmod`` for every file or
+    directory either manager creates). The FileSystem manager's
+    non-overwriting write checks that the target does not exist and then
+    renames onto it; only a second writer of the same checkpoint could
+    race that, and there is none: the memory sink checkpoints into a
+    fresh per-query temp dir on the local filesystem, where
+    ``FileSystem.rename`` is POSIX ``rename(2)``, which is atomic.
+    Spark's checkpoint checksums wrap either manager and stay on. When
+    the session sets ``spark.sql.streaming.checkpointLocation`` (which
+    may point at HDFS or S3), the query keeps Spark's default manager.
+
+    Both confs are set on the stream's session only around ``start()``,
+    which clones the session: the running query keeps them (the state
+    stores on the executors read the manager from the query's Hadoop
+    conf) and the caller's conf reads the same afterwards, also when
+    ``start()`` raises; an unset conf stays unset. Changing the same
+    session's conf from another thread meanwhile is unsupported.
     """
     src = stream_df
     if watermark is not None:
@@ -174,13 +209,23 @@ def run_to_memory(
         .trigger(availableNow=True)
     )
     spark = stream_df.sparkSession
-    caller = spark.conf.get(_SHUFFLE_PARTITIONS)
-    state = min(int(caller), spark.sparkContext.defaultParallelism)
-    spark.conf.set(_SHUFFLE_PARTITIONS, str(state))
+    state = min(
+        int(spark.conf.get(_SHUFFLE_PARTITIONS)), spark.sparkContext.defaultParallelism
+    )
+    scoped = {_SHUFFLE_PARTITIONS: str(state)}
+    if spark.conf.get(_CHECKPOINT_LOCATION, None) is None:
+        scoped[_CHECKPOINT_MANAGER] = _FS_CHECKPOINT_MANAGER
+    caller = {k: spark.conf.get(k, None) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
     try:
         q = writer.start()
     finally:
-        spark.conf.set(_SHUFFLE_PARTITIONS, caller)
+        for k, v in caller.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     q.awaitTermination()
     return q
 

@@ -857,12 +857,26 @@ def test_stream_sliding_extrema_converges_under_jittered_arrival(
     assert got.count() > 0
 
 
-# -- state partitions sized at start, sentinel projected in the JVM ---------
-# The suite session runs local[$SPARK_GRAFT_CPUS] with 8 shuffle
-# partitions, where min(partitions, defaultParallelism) can be the conf
-# itself; these tests raise the conf to 32 so the sizing path is taken.
+# -- state partitions sized and checkpoint manager set at start, sentinel ----
+# projected in the JVM. The suite session runs local[$SPARK_GRAFT_CPUS]
+# with 8 shuffle partitions, where min(partitions, defaultParallelism) can
+# be the conf itself; these tests raise the conf to 32 so the sizing path
+# is taken.
 
 _PARTITIONS = "spark.sql.shuffle.partitions"
+_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+_FS_MANAGER = _CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+_FC_MANAGER = _CHECKPOINTING + "FileContextBasedCheckpointFileManager"
+
+
+def _query_checkpointing(q):
+    """The checkpoint manager conf of the query's cloned session and the
+    class of the manager its offset log writes through."""
+    execution = q._jsq.streamingQuery()
+    conf = execution.sparkSessionForStream().conf()
+    manager = execution.offsetLog().fileManager().getClass().getName()
+    return conf.get(_MANAGER, None), manager
 
 
 @pytest.fixture
@@ -890,6 +904,8 @@ def test_run_to_memory_sizes_state_partitions_to_parallelism(
     assert ops, "no state operator reported progress"
     assert {op.numShufflePartitions for op in ops} == {want_parts}
     assert spark.conf.get(_PARTITIONS) == "32"
+    assert _query_checkpointing(q) == (_FS_MANAGER, _FS_MANAGER)
+    assert spark.conf.get(_MANAGER, None) is None
     got = (
         spark.table("sink_tumbling_sized")
         .filter(F.col("event_type") != "sentinel")
@@ -905,16 +921,48 @@ def test_run_to_memory_restores_conf_when_start_raises(
     spark, replay_dir, partitions_32
 ):
     """Append mode on a watermark-less aggregation is rejected inside
-    ``start()``; the caller's conf must still read its own value."""
+    ``start()``; the caller's conf must still read its own value, an
+    unset checkpoint manager staying unset."""
     from pyspark.errors import AnalysisException
 
-    with pytest.raises(AnalysisException):
-        run_to_memory(
+    for manager in (None, _FC_MANAGER):
+        if manager is not None:
+            spark.conf.set(_MANAGER, manager)
+        try:
+            with pytest.raises(AnalysisException):
+                run_to_memory(
+                    read_event_stream(spark, replay_dir),
+                    TR.tumbling_counts,
+                    "sink_tumbling_rejected",
+                    output_mode="append",
+                )
+            assert spark.conf.get(_PARTITIONS) == "32"
+            assert spark.conf.get(_MANAGER, None) == manager
+        finally:
+            spark.conf.unset(_MANAGER)
+
+
+def test_run_to_memory_keeps_default_manager_for_session_checkpoint_location(
+    spark, replay_dir, tmp_path, partitions_32
+):
+    """A session-wide checkpoint location may be a remote filesystem
+    whose rename is not atomic, so the query keeps Spark's default
+    FileContext manager there."""
+    location = "spark.sql.streaming.checkpointLocation"
+    spark.conf.set(location, str(tmp_path / "checkpoints"))
+    try:
+        q = run_to_memory(
             read_event_stream(spark, replay_dir),
             TR.tumbling_counts,
-            "sink_tumbling_rejected",
+            "sink_tumbling_located",
             output_mode="append",
+            watermark="1 hour",
         )
+    finally:
+        spark.conf.unset(location)
+    assert _query_checkpointing(q) == (None, _FC_MANAGER)
+    assert (tmp_path / "checkpoints" / "sink_tumbling_located" / "offsets").is_dir()
+    assert spark.conf.get(_MANAGER, None) is None
     assert spark.conf.get(_PARTITIONS) == "32"
 
 
